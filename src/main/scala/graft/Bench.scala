@@ -1,11 +1,25 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import scala.util.control.NonFatal
 
 /** Benchmark entry point (driver contract): runs every registered query
   * on SPARK_GRAFT_SF_DIR and prints one JSON line with per-query and
   * total wall-clock seconds. */
 object Bench {
+  /** Times each query in order. A query that throws (non-fatally) is
+    * added to `failed` and reported on stderr; callers leave failed
+    * names out of every total, since the time measures how fast the
+    * query failed. Fatal errors propagate and end the run. */
+  def timePass(queries: Seq[(String, () => Unit)],
+               failed: scala.collection.mutable.Set[String]): Seq[(String, Double)] =
+    queries.map { case (name, run) =>
+      val t0 = System.nanoTime()
+      try run() catch { case NonFatal(e) =>
+        if (failed.add(name)) System.err.println(s"[bench] $name failed: $e") }
+      name -> (System.nanoTime() - t0) / 1e9
+    }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     // optional args = query-name subset, for focused local iteration;
@@ -48,17 +62,10 @@ object Bench {
     // faster). The measured pass below reports steady-state latency,
     // standard warm-iteration benchmarking; the cold numbers are written
     // to the detail file alongside for transparency.
-    val cold = selected.map { case (name, fn) =>
-      val t0 = System.nanoTime()
-      try { evalAll(fn(spark, sfDir)) } catch { case _: Throwable => () }
-      name -> (System.nanoTime() - t0) / 1e9
-    }
-
-    def pass() = selected.map { case (name, fn) =>
-      val t0 = System.nanoTime()
-      try { evalAll(fn(spark, sfDir)) } catch { case _: Throwable => () }
-      name -> (System.nanoTime() - t0) / 1e9
-    }
+    val failed = scala.collection.mutable.LinkedHashSet[String]()
+    def pass() = timePass(selected.map { case (name, fn) =>
+      name -> (() => evalAll(fn(spark, sfDir))) }, failed)
+    val cold = pass()
     // Host-load calibration probe: a fixed-cost job (hash-sum over a
     // generated range — no I/O, no shuffle, saturates the executor
     // threads) timed before every measured pass. Its wall time moves
@@ -85,7 +92,7 @@ object Bench {
     val passes = Seq.fill(nPasses) { (calibrate(), pass()) }
     val calibs = passes.map(_._1)
     val qtimes = passes.map(_._2)
-    val results = qtimes.head.indices.map { i =>
+    val pinned = qtimes.head.indices.map { i =>
       qtimes.head(i)._1 -> qtimes.map(_(i)._2).min }.toSeq
     // Raw-scan surface (r14 verdict #2): the warm passes above run with
     // the base tables pinned (the serving configuration), while the
@@ -121,7 +128,12 @@ object Bench {
         Some((c, p1.zip(p2).map { case ((n, a), (_, b)) => n -> math.min(a, b) }))
       }
     def fmt(v: Double) = BigDecimal(v).setScale(3, BigDecimal.RoundingMode.HALF_UP).toString
+    def ok(qs: Seq[(String, Double)]) = qs.filterNot(q => failed(q._1))
+    val results = ok(pinned)
     val total = results.map(_._2).sum
+    def failedJson(names: Iterable[String]) =
+      s""""n_failed":${failed.size},"failed":""" +
+        names.map("\"" + _ + "\"").mkString("[", ",", "]")
     // Full per-query detail goes to a file; the stdout line must stay
     // SHORT — the driver keeps only the last ~2000 chars of output, and a
     // JSON line carrying all ~100 query timings gets truncated mid-line
@@ -132,26 +144,28 @@ object Bench {
     val detailPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT",
       new java.io.File("BENCH_LOCAL.json").getAbsolutePath)
     val calibJson = calibs.map(fmt).mkString("[", ",", "]")
-    val passTotals = passes.map(p => fmt(p._2.map(_._2).sum)).mkString("[", ",", "]")
+    val passTotals = passes.map(p => fmt(ok(p._2).map(_._2).sum)).mkString("[", ",", "]")
     val rawJson = rawPass.map { case (c, qs) =>
-      s""","raw_scan_total":${fmt(qs.map(_._2).sum)},"raw_calib_sec":${fmt(c)}"""
+      s""","raw_scan_total":${fmt(ok(qs).map(_._2).sum)},"raw_calib_sec":${fmt(c)}"""
     }.getOrElse("")
     try {
-      val coldFull = cold.map { case (k, v) => "\"" + k + "\":" + fmt(v) }
+      val coldFull = ok(cold).map { case (k, v) => "\"" + k + "\":" + fmt(v) }
         .mkString("{", ",", "}")
       val rawFull = rawPass.map { case (_, qs) =>
-        "," + "\"raw_queries\":" + qs.map { case (k, v) => "\"" + k + "\":" + fmt(v) }
+        "," + "\"raw_queries\":" + ok(qs).map { case (k, v) => "\"" + k + "\":" + fmt(v) }
           .mkString("{", ",", "}")
       }.getOrElse("")
       val w = new java.io.PrintWriter(detailPath)
-      w.println(s"""{"metric":"total","value":${fmt(total)},"unit":"sec","n_queries":${results.size},"n_passes":$nPasses,"pass_totals":$passTotals,"calib_sec":$calibJson$rawJson$rawFull,"queries":$full,"cold_total":${fmt(cold.map(_._2).sum)},"cold_queries":$coldFull,"sf":"$sfDir"}""")
+      w.println(s"""{"metric":"total","value":${fmt(total)},"unit":"sec","n_queries":${results.size},"n_passes":$nPasses,"pass_totals":$passTotals,"calib_sec":$calibJson$rawJson$rawFull,"queries":$full,${failedJson(failed)},"cold_total":${fmt(ok(cold).map(_._2).sum)},"cold_queries":$coldFull,"sf":"$sfDir"}""")
       w.close()
-    } catch { case e: Throwable =>
+    } catch { case NonFatal(e) =>
       System.err.println(s"bench detail write failed ($detailPath): ${e.getMessage}") }
-    val top = results.sortBy(-_._2).take(25)
+    // failed names share the 25-entry budget with the slowest queries
+    val failedShown = failed.take(10)
+    val top = results.sortBy(-_._2).take(25 - failedShown.size)
       .map { case (k, v) => "\"" + k + "\":" + fmt(v) }
       .mkString("{", ",", "}")
-    println(s"""{"metric":"total","value":${fmt(total)},"unit":"sec","n_queries":${results.size},"n_passes":$nPasses,"calib_sec":$calibJson$rawJson,"queries":$top,"sf":"$sfDir"}""")
+    println(s"""{"metric":"total","value":${fmt(total)},"unit":"sec","n_queries":${results.size},"n_passes":$nPasses,"calib_sec":$calibJson$rawJson,"queries":$top,${failedJson(failedShown)},"sf":"$sfDir"}""")
     spark.stop()
   }
 }

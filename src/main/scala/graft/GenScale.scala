@@ -50,9 +50,9 @@ object GenScale {
     write("supplier", reps(Tables.supplier(spark, src), Seq("s_suppkey")))
     write("part", reps(Tables.part(spark, src), Seq("p_partkey")))
     // dimensions stay as-is (broadcast side everywhere)
-    spark.read.parquet(s"$src/nation.parquet").write.mode("overwrite").parquet(s"$dst/nation.parquet")
-    spark.read.parquet(s"$src/region.parquet").write.mode("overwrite").parquet(s"$dst/region.parquet")
-    write("events", reps(spark.read.parquet(s"$src/events.parquet"),
+    Tables.nation(spark, src).write.mode("overwrite").parquet(s"$dst/nation.parquet")
+    Tables.region(spark, src).write.mode("overwrite").parquet(s"$dst/region.parquet")
+    write("events", reps(Tables.read(spark, src, "events"),
       Seq("event_id", "user_id")))
     write("documents", reps(Tables.documents(spark, src), Seq("doc_id"),
       (d, i) => d.withColumn("text", concat(lit(f"r$i%03d "), col("text")))

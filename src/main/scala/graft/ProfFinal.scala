@@ -36,8 +36,11 @@ object ProfFinal {
       (name, f) => { val d = t(s"stage: $name")(f()); frames += name.split(" ")(0) -> d; d })
     val cand = frames("cand"); val shCand = frames("shCand"); val ids3 = frames("ids3")
     println(s"[prof-final] counts: ids3=${ids3.count()} cand=${cand.count()} shCand=${shCand.count()}")
-    val pairs = t("pairJaccardHashed + filter (ckpt)") {
-      Dedup.pairJaccardHashed(cand, shCand)
+    // shCand's shape follows graft.pipeline.verifyShape: per-doc hash
+    // arrays (id, hs) by default, exploded (id, h) rows otherwise
+    val pairs = t("pairJaccard + filter (ckpt)") {
+      (if (shCand.columns.contains("hs")) Dedup.pairJaccardArrays(cand, shCand)
+       else Dedup.pairJaccardHashed(cand, shCand))
         .filter(col("jacc") >= 0.5).select("doc_a", "doc_b").localCheckpoint()
     }
     println(s"[prof-final] verified pairs = ${pairs.count()}")

@@ -1,6 +1,13 @@
 package graft
 
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.format.converter.ParquetMetadataConverter
+import org.apache.parquet.hadoop.Footer
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.InMemoryFileIndex
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat,
+  ParquetFooterReader, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
 
@@ -46,9 +53,57 @@ object Tables {
   private val cached = new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
 
   def read(spark: SparkSession, dir: String, name: String): DataFrame =
-    if (!cacheEnabled) spark.read.parquet(s"$dir/$name.parquet")
+    if (!cacheEnabled) open(spark, s"$dir/$name.parquet")
     else cached.computeIfAbsent(s"$dir/$name",
-      _ => spark.read.parquet(s"$dir/$name.parquet").cache())
+      _ => open(spark, s"$dir/$name.parquet").cache())
+
+  /** Opens a parquet dataset (a file, or a directory of part files with
+    * optional partition subdirectories) without running a Spark job.
+    *
+    * `spark.read.parquet(path)` infers the schema through
+    * `SchemaMergeUtils.mergeSchemasInParallel`, which launches a one-task
+    * job even with schema merging off, to read the one footer that
+    * inference touches. This reads that same footer on the driver and
+    * hands Spark the result as the data schema. The footer is the one
+    * Spark's own inference picks with `mergeSchema` off: `_common_metadata`,
+    * else `_metadata`, else the first data file by path, from the same
+    * file index (so the same hidden-name filter). Partition columns are
+    * still discovered from directory names by the read itself.
+    *
+    * Every call lists the path and reads one footer: nothing is cached,
+    * so a rewritten dataset is seen on the next open. Schema merging
+    * needs every footer and is refused rather than silently skipped.
+    * A path with nothing to read (missing, or no parquet files) goes to
+    * `spark.read.parquet` so it fails with Spark's own error. */
+  def open(spark: SparkSession, path: String): DataFrame =
+    openIfPresent(spark, path).getOrElse(spark.read.parquet(path))
+
+  /** [[open]], or None when `path` is absent or holds no parquet file
+    * to take a schema from. */
+  def openIfPresent(spark: SparkSession, path: String): Option[DataFrame] = {
+    val conf = spark.sessionState.conf
+    if (conf.isParquetSchemaMergingEnabled)
+      throw new UnsupportedOperationException(
+        s"Tables.open reads one footer per dataset, so it cannot honour " +
+          s"spark.sql.parquet.mergeSchema=true (opening $path)")
+    val hadoopConf = spark.sessionState.newHadoopConf()
+    val root = new Path(path)
+    val fs = root.getFileSystem(hadoopConf)
+    if (!fs.exists(root)) return None
+    val files = new InMemoryFileIndex(spark, Seq(fs.makeQualified(root)), Map.empty, None)
+      .allFiles().sortBy(_.getPath.toString)
+    val summaries = Seq("_common_metadata", "_metadata") // in preference order
+    summaries.flatMap(n => files.find(_.getPath.getName == n)).headOption
+      .orElse(files.find(f => !summaries.contains(f.getPath.getName)))
+      .map { f =>
+        val footer = ParquetFooterReader.readFooter(
+          HadoopInputFile.fromStatus(f, hadoopConf),
+          ParquetMetadataConverter.SKIP_ROW_GROUPS)
+        val schema = ParquetFileFormat.readSchemaFromFooter(
+          new Footer(f.getPath, footer), new ParquetToSparkSchemaConverter(conf))
+        spark.read.schema(schema).parquet(path)
+      }
+  }
 
   /** Unpin one dataset's tables / everything (cache lifecycle hooks —
     * Bench/Verify call these between datasets so a long-lived session

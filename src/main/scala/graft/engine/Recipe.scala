@@ -50,10 +50,13 @@ object RecipeRegistry {
   */
 class Engine(spark: SparkSession, stateDir: String) {
 
+  /** Empty only when `path` is absent or holds no parquet files (a
+    * first run, or a ledger reset to its `_run_seq` alone). Any other
+    * read failure propagates: a corrupt ledger read as empty would
+    * silently re-insert every unit. */
   private def readOrEmpty(path: String, schemaOf: DataFrame): DataFrame =
-    try spark.read.parquet(path)
-    catch { case _: Exception => spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schemaOf.schema) }
+    graft.Tables.openIfPresent(spark, path).getOrElse(spark.createDataFrame(
+      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schemaOf.schema))
 
   /** Run one recipe over `inputs`. Returns the per-unit action audit
     * (insert/overwrite/skip/keep). */

@@ -53,7 +53,7 @@ object GridStore {
       .parquet(path)
 
   def read(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(path)
+    graft.Tables.open(spark, path)
 
   /** Compaction (the reference's debounced-rebuild X6 maps to an
     * OPTIMIZE cadence, SURVEY §2.9): rewrite each (collection, p_date)

@@ -145,8 +145,13 @@ object CurationQueries extends QueryModule {
       // moves into the final job). Measured vs the r9 exploded row
       // form ("exploded", the escape hatch): med 1.895 → 1.807, min
       // 1.658 → 1.529 at sf0.1; same ordering at N=9.
-      val verifyArr = !docs.sparkSession.conf
-        .getOption("graft.pipeline.verifyShape").contains("exploded")
+      val verifyArr = docs.sparkSession.conf
+          .getOption("graft.pipeline.verifyShape") match {
+        case None | Some("arr") => true
+        case Some("exploded") => false
+        case Some(v) => throw new IllegalArgumentException(
+          s"graft.pipeline.verifyShape must be arr or exploded, got '$v'")
+      }
       val candDocs = docs.join(candIds, Seq("doc_id"), "left_semi")
       val shCand = stage("shCand candidate-hashes", () =>
         if (verifyArr) Dedup.shingleHashArrays(candDocs, "doc_id", "text")

@@ -255,7 +255,7 @@ object SimilarityQueries extends QueryModule {
     // same first-batch-trained centroids.
     "s_semdedup_stream" -> ((s, dir) => {
       val idx = semdedupStreamOf(s, dir)
-      s.read.parquet(s"$idx/drops").distinct() // replayed appends collapse (X2)
+      graft.Tables.open(s, s"$idx/drops").distinct() // replayed appends collapse (X2)
     }),
 
     // Product-quantization ANN (ADC): 4 subspaces × 8 codes trained with

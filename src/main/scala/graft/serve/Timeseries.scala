@@ -8,6 +8,11 @@ import org.apache.spark.sql.functions._
   * analysis/timeseries/service.py, §3.3): point and area time-series
   * over the long-form pixel cube. Predicates go bbox-first so they
   * reach the storage layer as sargable filters before any mask work.
+  *
+  * A series holds at most one row per timestep, so it is ordered inside
+  * one partition rather than with a global `orderBy`: a global sort
+  * runs a range-partitioner sampling job that re-executes the whole
+  * scan just to order a handful of rows.
   */
 object Timeseries {
 
@@ -17,8 +22,11 @@ object Timeseries {
             gridW: Int, gridH: Int): DataFrame = {
     val cx = math.min(gridW - 1, math.max(0, math.floor((lon - west) / pw))).toInt
     val cy = math.min(gridH - 1, math.max(0, math.floor((north - lat) / ph))).toInt
+    // repartition, not coalesce: the scan stays parallel and only the
+    // matching rows cross the one-partition exchange
     pixels.filter(col("x") === cx && col("y") === cy)
-      .select(col("t"), col("v")).orderBy(col("t"))
+      .select(col("t"), col("v"))
+      .repartition(1).sortWithinPartitions(col("t"))
   }
 
   /** Area time-series over a WKT polygon with an aggregation `how` ∈
@@ -39,6 +47,6 @@ object Timeseries {
       case other => throw new IllegalArgumentException(s"how=$other")
     }
     masked.groupBy("t").agg(agg.as("value"), count(col("v")).as("n_pixels"))
-      .orderBy(col("t"))
+      .coalesce(1).sortWithinPartitions(col("t"))
   }
 }

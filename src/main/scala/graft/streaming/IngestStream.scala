@@ -94,7 +94,7 @@ object IngestStream {
     // filter BEFORE any cast so the predicate lands in PartitionFilters
     // (string literals coerce to the inferred partition type); then
     // normalize `date` back to its written STRING form for unions
-    spark.read.parquet(target)
+    graft.Tables.open(spark, target)
       .filter(pred)
       .withColumn("date", col("date").cast("string"))
   }

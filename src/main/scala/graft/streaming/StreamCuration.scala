@@ -584,7 +584,7 @@ object StreamCuration {
       if (name == "spans" || name == "bands") {
         val keyCol = if (name == "spans") "h" else "key"
         if (fs.listStatus(p).exists(_.getPath.getName.endsWith(".parquet"))) {
-          val actual = s.read.parquet(part(dir, name)).schema
+          val actual = graft.Tables.open(s, part(dir, name)).schema
           actual.find(_.name == keyCol).foreach { f =>
             require(f.dataType == org.apache.spark.sql.types.LongType,
               s"persisted '$name' state at ${part(dir, name)} stores '$keyCol' as " +
@@ -615,7 +615,7 @@ object StreamCuration {
         }
         if (!verOk) {
           if (fs.listStatus(p).exists(_.getPath.getName.endsWith(".parquet"))) {
-            val mx = s.read.parquet(part(dir, name))
+            val mx = graft.Tables.open(s, part(dir, name))
               .agg(org.apache.spark.sql.functions.max("key")).head
             require(mx.isNullAt(0) || mx.getLong(0) >= (1L << 32),
               s"persisted 'bands' state at ${part(dir, name)} holds only " +
@@ -651,7 +651,7 @@ object StreamCuration {
     s.sql(s"DROP TABLE IF EXISTS $tmpT")
     fs.delete(tmp, true); fs.mkdirs(tmp)
     s.sql(stateTableDdl(tmpT, name, tmpLoc))
-    s.read.parquet(p.toString).distinct()
+    graft.Tables.open(s, p.toString).distinct()
       .select(cols.map(c => col(c._1)): _*) // positional insert order
       .repartition(StateBuckets, keys.map(col): _*)
       .write.mode("append").insertInto(tmpT)
@@ -696,7 +696,7 @@ object StreamCuration {
       // as absent and curate every batch against empty state
       val p = new org.apache.hadoop.fs.Path(part(dir, name))
       val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (fs.exists(p)) maybeDedup(s.read.parquet(part(dir, name))) else fallback
+      if (fs.exists(p)) maybeDedup(graft.Tables.open(s, part(dir, name))) else fallback
     }
     // key-sets read through their bucketed-table identity so plans
     // see the HashPartitioning the files were written with
@@ -812,7 +812,7 @@ object StreamCuration {
         fs.delete(tmp, true)
         // the distinct's shuffle partitioning sets the snapshot's file
         // count — one file SET total, vs one per processed batch
-        s.read.parquet(p.toString).distinct().write.parquet(tmp.toString)
+        graft.Tables.open(s, p.toString).distinct().write.parquet(tmp.toString)
         val old = new org.apache.hadoop.fs.Path(part(dir, s".$name.old"))
         fs.delete(old, true)
         require(fs.rename(p, old) && fs.rename(tmp, p),

@@ -103,7 +103,7 @@ object StreamIndex {
     val centPath = new Path(s"$dir/centroids")
     val fs = fsOf(s, centPath)
     val cents =
-      if (fs.exists(centPath)) s.read.parquet(centPath.toString)
+      if (fs.exists(centPath)) graft.Tables.open(s, centPath.toString)
       else {
         val kEff = if (k > 0) k else Similarity.cellCount(batch.count())
         // literal-back the trained centroids (config-scale collect, the
@@ -149,7 +149,7 @@ object StreamIndex {
     val centPath = new Path(s"$dir/centroids")
     val fs = fsOf(s, centPath)
     val cents =
-      if (fs.exists(centPath)) s.read.parquet(centPath.toString)
+      if (fs.exists(centPath)) graft.Tables.open(s, centPath.toString)
       else {
         val kEff = if (k > 0) k else Similarity.cellCount(batch.count())
         val trained = Similarity.ivfKmeansCentroids(batch, kEff, iters)
@@ -164,7 +164,7 @@ object StreamIndex {
     val listsPath = new Path(s"$dir/lists")
     val state =
       if (fsOf(s, listsPath).exists(listsPath))
-        s.read.parquet(listsPath.toString)
+        graft.Tables.open(s, listsPath.toString)
           // partition-pruned to the touched cells (string keys by
           // session contract — prune on strings, cast after)
           .filter(col("cid").isin(touched.map(_.toString): _*))
@@ -202,7 +202,7 @@ object StreamIndex {
   def search(s: SparkSession, dir: String, queries: DataFrame,
              nprobe: Int, topK: Int): DataFrame = {
     import s.implicits._
-    val cents = s.read.parquet(s"$dir/centroids")
+    val cents = graft.Tables.open(s, s"$dir/centroids")
     // the probed frame is queries × nprobe rows — literal-back it (one
     // collect) so the probe lineage runs ONCE, serving both the
     // partition-filter cid set and the scoring join's build side
@@ -216,7 +216,7 @@ object StreamIndex {
     // inference off by contract), so prune on the string directory
     // value and cast after.
     val cids = probed.map(_._4).distinct.sorted
-    val lists = s.read.parquet(s"$dir/lists")
+    val lists = graft.Tables.open(s, s"$dir/lists")
       .filter(col("cid").isin(cids.map(_.toString): _*))
       .withColumn("cid", col("cid").cast("int"))
       .distinct() // replayed-batch appends collapse (X2)

@@ -9,6 +9,23 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSpec.session
   lazy val sf0001 = "/root/testdata/sf0.001"
 
+  /** Runs `f` and counts the Spark jobs it started. */
+  def jobsDuring[T](f: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    org.apache.spark.ListenerDrain(sc) // earlier work's events stay out
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    try {
+      val r = f
+      org.apache.spark.ListenerDrain(sc)
+      (r, jobs.get)
+    } finally sc.removeSparkListener(listener)
+  }
+
   /** Drop managed tables AND clear their warehouse directories — a
     * crashed prior run can leave the location behind with no catalog
     * entry, making the next saveAsTable refuse the CREATE. */

@@ -367,6 +367,32 @@ class EngineSpec extends SparkSpec {
       s"first audit drifted: $a1Actions -> $again")
   }
 
+  test("a corrupt ledger fails the run; a ledger holding no data files reads as empty") {
+    val stateDir = Files.createTempDirectory("graft-engine-ledger-").toString
+    val engine = new Engine(spark, stateDir)
+    val ledgerDir = new java.io.File(s"$stateDir/climatology/ledger")
+    engine.run(new ClimatologyRecipe, mkInputs(bump = false))
+    val parts = ledgerDir.listFiles().filter(_.getName.endsWith(".parquet"))
+    assert(parts.nonEmpty)
+
+    // truncated part files: an unreadable ledger must not read as "no
+    // units" (that would re-insert every unit over existing outputs)
+    parts.foreach { f =>
+      val bytes = Files.readAllBytes(f.toPath)
+      Files.write(f.toPath, bytes.take(bytes.length / 2))
+    }
+    intercept[Exception](engine.run(new ClimatologyRecipe, mkInputs(bump = false)).collect())
+    assert(spark.read.parquet(s"$stateDir/climatology/lineage").count() == 3,
+      "a failed run must not append lineage")
+
+    // only the run counter left: the ledger is empty, every unit inserts
+    parts.foreach(_.delete())
+    assert(!ledgerDir.listFiles().exists(_.getName.endsWith(".parquet")))
+    val again = engine.run(new ClimatologyRecipe, mkInputs(bump = false))
+    assert(again.groupBy("action").count().as[(String, Long)].collect().toMap
+      == Map("insert" -> 3))
+  }
+
   test("transitiveDownstream: driver BFS equals the distributed walk exactly") {
     // diamond + chain + disconnected node; seed reaches 12 by two
     // routes (depths 1 and 2) — min must win on both paths
