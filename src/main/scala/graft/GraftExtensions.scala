@@ -4,11 +4,11 @@ import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
-import graft.functions.{Haversine, QDotProduct, SpanHashWindows, SpanHashWindowsLong, TileMaskedStats, TileStatsPartial}
+import graft.functions.{Haversine, QDotProduct, SpanHashWindows, SpanHashWindowsLong, TileStatsPartial}
 
 /** Deployment-grade wiring for the engine's native expressions:
   * `--conf spark.sql.extensions=graft.GraftExtensions` makes
-  * `haversine_km`, `tile_stats_partial`, `tile_masked_stats` and
+  * `haversine_km`, `tile_stats_partial` and
   * `span_hash_windows` available to pure-SQL users on every session of
   * the cluster, with no driver code. `Sessions.build` registers the
   * same builders imperatively for embedded use (`functions.Registry`);
@@ -39,8 +39,6 @@ object GraftExtensions {
       exprs => Haversine(exprs(0), exprs(1), exprs(2), exprs(3))),
     ("tile_stats_partial", "tile_stats_partial(tile) - per-tile stat partials",
       exprs => TileStatsPartial(exprs.head)),
-    ("tile_masked_stats", "tile_masked_stats(tile, mask) - masked tile stats",
-      exprs => TileMaskedStats(exprs(0), exprs(1))),
     ("span_hash_windows", "span_hash_windows(tokens, w) - md5 of every w-token window",
       exprs => SpanHashWindows(exprs(0), exprs(1))),
     ("span_hash_windows_long",

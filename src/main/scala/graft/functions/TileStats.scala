@@ -47,49 +47,6 @@ case class TileStatsPartial(child: Expression)
     copy(child = newChild)
 }
 
-/** Masked variant: stats over cells where the parallel mask array is
-  * true — the fused kernel of tile-level zonal statistics (mask tiles
-  * are precomputed per (boundary, tile) and joined; the pixel data never
-  * explodes). */
-case class TileMaskedStats(tile: Expression, mask: Expression)
-    extends org.apache.spark.sql.catalyst.expressions.BinaryExpression with CodegenFallback {
-
-  override def left: Expression = tile
-  override def right: Expression = mask
-  override def dataType: DataType = TileStatsPartial.schema
-  override def prettyName: String = "tile_masked_stats"
-
-  override def nullSafeEval(t: Any, m: Any): Any = {
-    val arr = t.asInstanceOf[ArrayData]
-    val msk = m.asInstanceOf[ArrayData]
-    val len = math.min(arr.numElements(), msk.numElements())
-    var n = 0L; var s = 0.0; var q = 0.0
-    var mn = Double.PositiveInfinity; var mx = Double.NegativeInfinity
-    var i = 0
-    while (i < len) {
-      if (!arr.isNullAt(i) && !msk.isNullAt(i) && msk.getBoolean(i)) {
-        val v = arr.getDouble(i)
-        n += 1; s += v; q += v * v
-        if (v < mn) mn = v
-        if (v > mx) mx = v
-      }
-      i += 1
-    }
-    InternalRow(n, s, q,
-      if (n > 0) mn else null,
-      if (n > 0) mx else null)
-  }
-
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
-    copy(tile = l, mask = r)
-}
-
-object TileMaskedStats {
-  def tileMaskedStats(tile: Column, mask: Column): Column =
-    GraftShim.column(TileMaskedStats(
-      GraftShim.expression(tile), GraftShim.expression(mask)))
-}
-
 object TileStatsPartial {
   val schema: StructType = StructType(Seq(
     StructField("n", LongType, nullable = false),

@@ -2,16 +2,14 @@ package graft.ops
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
-import org.locationtech.jts.geom.{Coordinate, Geometry, GeometryFactory}
-import org.locationtech.jts.io.WKTReader
 
 /** Geometry operators (SURVEY F12/F13, P4):
   *
   *  - bbox intersection / containment as plain column arithmetic (exact,
   *    pushdown-friendly — these run against tile min/max metadata first);
-  *  - exact point-in-polygon via JTS PreparedGeometry inside a pixel-
-  *    center containment UDF (the reference's rasterize-mask path,
-  *    geoprocessing/zonal.py:30-38, ingestion/clipper.py:125-163);
+  *  - exact point-in-polygon lives in [[ZonalIndex]] (the reference's
+  *    rasterize-mask path, geoprocessing/zonal.py:30-38,
+  *    ingestion/clipper.py:125-163);
   *  - clip-window arithmetic: geo bbox → integer pixel window with
   *    clamping and exact re-derived bounds (ingestion/clipper.py:51-123).
   */
@@ -28,21 +26,6 @@ object Geo {
     edgeSide(px, py, a._1, a._2, b._1, b._2) >= 0 &&
       edgeSide(px, py, b._1, b._2, c._1, c._2) >= 0 &&
       edgeSide(px, py, c._1, c._2, a._1, a._2) >= 0
-
-  /** General point-in-polygon over WKT via JTS (broadcast the prepared
-    * geometry per executor; used for arbitrary GeoJSON/WKT boundaries
-    * where the arithmetic fast path doesn't apply). */
-  def containsUdf(wkt: String) = {
-    val f = new GeometryFactory()
-    udf { (x: Double, y: Double) =>
-      // PreparedGeometry is not serializable; parse lazily per executor.
-      // Bounded: reset rather than grow past the cap (see Zonal.cache).
-      if (Geo.parsedCache.size() >= 8192) Geo.parsedCache.clear()
-      val geom = Geo.parsedCache.computeIfAbsent(wkt, w => new WKTReader(f).read(w))
-      geom.contains(f.createPoint(new Coordinate(x, y)))
-    }
-  }
-  private val parsedCache = new java.util.concurrent.ConcurrentHashMap[String, Geometry]()
 
   /** CRS transforms (reference F12 `transform_geom`): WGS84 lon/lat ↔
     * Web-Mercator EPSG:3857 meters, the pair the serving layer needs

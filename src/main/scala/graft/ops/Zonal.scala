@@ -1,20 +1,27 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import graft.functions.SlotStats
+import org.apache.spark.sql.{Column, DataFrame, GraftShim, Row}
+import org.apache.spark.sql.catalyst.expressions.Literal
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, StructType}
 
 /** Zonal statistics over arbitrary geometries (SURVEY J1/A2; reference
   * geoprocessing/zonal.py:41-134).
   *
-  * Plan shape (scale-first):
-  *  1. cheap bbox prefilter — plain column predicates that push down to
-  *     parquet row-group min/max on pixel/tile coordinates;
-  *  2. exact pixel-center containment only on the survivors (JTS for
-  *     general WKT; the engine's "rasterize mask" equivalent);
-  *  3. partial aggregation per group (map-side), final merge — the
-  *     boundary table is broadcast, pixels never shuffle twice;
-  *  4. non-intersecting boundaries are restored as all-NULL rows via a
-  *     right frame join (the reference's outer-join-like contract).
+  * Plan shape: one pixel scan, one exchange, two Spark jobs.
+  *  1. the boundary frame is collected (a local frame collects
+  *     without a job) into a [[ZonalIndex]]: one slot per
+  *     boundary, a closed envelope and a lazily parsed prepared geometry;
+  *  2. each pixel gets the slots whose geometry covers its centre,
+  *     boundary-inclusive — a per-pixel index lookup, not a join;
+  *  3. one [[SlotStats]] aggregate grouped by `t` reduces every slot at
+  *     once (map-side partials, one exchange keyed by `t`), so each
+  *     timestep present yields every boundary's row, all NULL where the
+  *     boundary covers no pixel (the reference's outer-join-like
+  *     contract);
+  *  4. the per-`t` slot array is exploded and the boundary keys are
+  *     attached from a literal array — no join.
   */
 object Zonal {
 
@@ -28,103 +35,46 @@ object Zonal {
     * `boundary_stats_levels`, analysis/zonal_stats/service.py:158-175):
     * the boundary table carries a `level` column (admin level 0/1/2…)
     * and one granule fans out into per-(level, boundary, t) gold rows.
-    * One broadcast join covers every level — the level is just part of
-    * the grouping key, so the pixel scan is paid once, not per level. */
+    * Every level's boundaries are slots of one index — the level is just
+    * part of the key, so the pixel scan is paid once, not per level. */
   def zonalStatsLeveled(pixels: DataFrame, leveledBoundaries: DataFrame): DataFrame =
     zonalStatsKeyed(pixels, leveledBoundaries, Seq("level", "boundary_id"))
 
   private def zonalStatsKeyed(pixels: DataFrame, boundaries: DataFrame,
                               keys: Seq[String]): DataFrame = {
-    val bboxHit = pixels.join(broadcast(boundaries),
-      col("lon") >= col("bw") && col("lon") < col("be") &&
-        col("lat") >= col("bs") && col("lat") < col("bn"))
-    // exact containment per boundary geometry (deterministic JTS test)
-    val exact = bboxHit.filter(containsPoint(col("geom_wkt"), col("lon"), col("lat")))
-    val stats = exact.groupBy(keys.head, keys.tail :+ "t": _*).agg(
-      avg(col("v")).as("zmean"),
-      min(col("v")).as("zmin"),
-      max(col("v")).as("zmax"),
-      sum(col("v")).as("zsum"),
-      stddev_pop(col("v")).as("zstd"),
-      count(col("v")).as("zcount"))
-    val frame = boundaries.select(keys.head, keys.tail: _*)
-      .crossJoin(pixels.select("t").distinct())
-    frame.join(stats, keys :+ "t", "left")
+    val local = boundaries.select((keys ++ Seq("geom_wkt", "bw", "bs", "be", "bn")).map(col): _*)
+    val rows = local.collect().toSeq
+    val k = keys.size
+    def coord(r: Row, i: Int) =
+      if (r.isNullAt(k + i)) Double.NaN else r.getAs[Number](k + i).doubleValue
+    val index = ZonalIndex(rows.map(r =>
+      (r.getString(k), (coord(r, 1), coord(r, 2), coord(r, 3), coord(r, 4)))))
+    val keyArray = GraftShim.column(Literal.create(
+      rows.map(r => Row.fromSeq(r.toSeq.take(k))), ArrayType(StructType(local.schema.take(k)))))
+    // the stats keep the types avg/min/max/sum/stddev_pop give over `v`
+    val vType = pixels.schema("v").dataType
+    val sumType = pixels.select(sum(col("v"))).schema.head.dataType
+    pixels
+      .groupBy("t")
+      .agg(SlotStats.slotStats(index.slotsOf(col("lon"), col("lat")),
+        col("v").cast("double"), index.size).as("z"))
+      .select(col("t"), posexplode(col("z")).as(Seq("slot", "z")))
+      .select(keys.map(key => element_at(keyArray, col("slot") + 1).getField(key).as(key)) ++
+        Seq(col("t"), col("z.zmean"), col("z.zmin").cast(vType).as("zmin"),
+          col("z.zmax").cast(vType).as("zmax"), col("z.zsum").cast(sumType).as("zsum"),
+          col("z.zstd"), col("z.zcount")): _*)
   }
 
-  /** JTS point-in-polygon as a (deterministic) UDF with per-executor
-    * geometry cache. Covers Polygon/MultiPolygon WKT; invalid WKT ⇒
-    * false (reference skips invalid geometries with NULL stats,
+  /** Pixel-centre `covers` against one literal WKT geometry (invalid
+    * WKT ⇒ false, as the reference skips invalid geometries,
     * zonal.py:108-117). */
   def containsPoint(wkt: Column, x: Column, y: Column): Column =
-    udf { (w: String, px: Double, py: Double) =>
-      try {
-        // bounded per-executor cache: admin-boundary sets fit easily;
-        // an ad-hoc geometry STREAM must not grow executor memory
-        // without limit. At the cap, evict ONE (arbitrary) entry —
-        // clear-all would make a working set of cap+1 re-parse the
-        // whole set every pass (thrash), single eviction re-parses at
-        // most one geometry per insert.
-        if (Zonal.cache.size() >= Zonal.cacheCap && !Zonal.cache.containsKey(w)) {
-          val it = Zonal.cache.keySet().iterator()
-          if (it.hasNext) { it.next(); it.remove() }
-        }
-        val geom = Zonal.cache.computeIfAbsent(w, k => {
-          Zonal.parses.incrementAndGet()
-          new org.locationtech.jts.io.WKTReader().read(k)
-        })
-        geom.covers(Zonal.factory.createPoint(
-          new org.locationtech.jts.geom.Coordinate(px, py)))
-      } catch { case _: Exception => false }
-    }.apply(wkt, x, y)
-
-  private val factory = new org.locationtech.jts.geom.GeometryFactory()
-  private[ops] val cacheCap = 8192
-  private[ops] val parses = new java.util.concurrent.atomic.AtomicLong()
-  private[ops] val cache =
-    new java.util.concurrent.ConcurrentHashMap[String, org.locationtech.jts.geom.Geometry]()
-
-  /** Tile-level zonal path (the 100 TB plan): precompute one boolean
-    * mask tile per (boundary, tile) — time-invariant, tiny relative to
-    * the data — then join data tiles and reduce with the fused
-    * TileMaskedStats kernel. Pixels never explode and never shuffle;
-    * only (boundary, t) partials do.
-    *
-    * maskTiles: (boundary_id, tile_y, tile_x, mask array<boolean>);
-    * tiles: (t, tile_y, tile_x, tile). */
-  def zonalStatsTiled(tiles: DataFrame, maskTiles: DataFrame): DataFrame = {
-    val joined = tiles.join(broadcast(maskTiles), Seq("tile_y", "tile_x"))
-      .withColumn("p", graft.functions.TileMaskedStats.tileMaskedStats(
-        col("tile"), col("mask")))
-    joined.groupBy("boundary_id", "t")
-      .agg(sum(col("p.n")).as("zcount"),
-        sum(col("p.sum")).as("s1"), sum(col("p.sumsq")).as("s2"),
-        min(col("p.mn")).as("zmin"), max(col("p.mx")).as("zmax"))
-      .select(col("boundary_id"), col("t"),
-        when(col("zcount") > 0, col("s1") / col("zcount")).as("zmean"),
-        col("zmin"), col("zmax"),
-        when(col("zcount") > 0, col("s1")).as("zsum"),
-        when(col("zcount") > 0,
-          sqrt(col("s2") / col("zcount")
-            - (col("s1") / col("zcount")) * (col("s1") / col("zcount")))).as("zstd"),
-        col("zcount"))
-  }
-
-  /** Rasterize boundary masks at tile granularity: one boolean per pixel
-    * center (the reference's geometry_mask, clipper.py:125-163). */
-  def maskTiles(boundaries: DataFrame, tilesYX: DataFrame, th: Int, tw: Int,
-                west: Double, north: Double, pw: Double, ph: Double): DataFrame = {
-    val cells = tilesYX.crossJoin(broadcast(boundaries))
-      .select(col("boundary_id"), col("geom_wkt"), col("tile_y"), col("tile_x"),
-        explode(sequence(lit(0), lit(th * tw - 1))).as("off"))
-      .withColumn("lon", lit(west) + (col("tile_x") * tw + col("off") % tw + 0.5) * pw)
-      .withColumn("lat", lit(north) - (col("tile_y") * th + (col("off") / tw).cast("int") + lit(0.5)) * ph)
-      .withColumn("inside", containsPoint(col("geom_wkt"), col("lon"), col("lat")))
-    cells.groupBy("boundary_id", "tile_y", "tile_x")
-      .agg(map_from_arrays(collect_list(col("off")), collect_list(col("inside"))).as("m"))
-      .select(col("boundary_id"), col("tile_y"), col("tile_x"),
-        expr(s"transform(sequence(0, ${th * tw - 1}), i -> m[i])").as("mask"))
-      // drop all-false masks: boundaries don't pay for tiles they miss
-      .filter(expr("exists(mask, x -> x)"))
-  }
+    GraftShim.literalValue(wkt) match {
+      case Some(w: String) =>
+        val inf = Double.PositiveInfinity
+        size(ZonalIndex(Seq((w, (-inf, -inf, inf, inf)))).slotsOf(x, y)) > 0
+      case _ =>
+        throw new IllegalArgumentException(
+          s"containsPoint takes a literal WKT, not $wkt; use zonalStats for a boundary frame")
+    }
 }

@@ -1,6 +1,6 @@
 package graft.serve
 
-import graft.ops.Zonal
+import graft.ops.ZonalIndex
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -30,14 +30,15 @@ object Timeseries {
   }
 
   /** Area time-series over a WKT polygon with an aggregation `how` ∈
-    * {mean, sum, min, max, std}: bbox prefilter → exact containment →
-    * per-timestep reduce (skipna semantics: NULL pixels absent). */
+    * {mean, sum, min, max, std}: closed bbox prefilter → pixel-centre
+    * `covers` (the zonal operator's [[ZonalIndex]]) → per-timestep reduce
+    * (skipna semantics: NULL pixels absent). */
   def area(pixels: DataFrame, wkt: String,
            bbox: (Double, Double, Double, Double), how: String): DataFrame = {
     val (w, s, e, n) = bbox
     val masked = pixels
-      .filter(col("lon") >= w && col("lon") < e && col("lat") >= s && col("lat") < n)
-      .filter(Zonal.containsPoint(lit(wkt), col("lon"), col("lat")))
+      .filter(col("lon") >= w && col("lon") <= e && col("lat") >= s && col("lat") <= n)
+      .filter(size(ZonalIndex(Seq((wkt, bbox))).slotsOf(col("lon"), col("lat"))) > 0)
     val agg = how match {
       case "mean" => avg(col("v"))
       case "sum" => sum(col("v"))

@@ -9,6 +9,12 @@ object GraftShim {
   def column(e: Expression): Column = classic.ExpressionUtils.column(e)
   def expression(c: Column): Expression = classic.ExpressionUtils.expression(c)
 
+  /** The value of a `lit(...)` column (None for any other column). */
+  def literalValue(c: Column): Option[Any] = c.node match {
+    case internal.Literal(v, _, _) => Some(v)
+    case _ => None
+  }
+
   /** Build a DataFrame from a (possibly custom) logical plan. */
   def ofRows(spark: SparkSession,
       plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): DataFrame =

@@ -28,4 +28,17 @@ class HygieneSpec extends AnyFunSuite {
       s"source files with literal NUL bytes (use \\u0000 escapes): " +
         offenders.mkString(", "))
   }
+
+  test("WKT is parsed in one main source file: one point-in-polygon path") {
+    val it = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main")).iterator()
+    val parsers = scala.collection.mutable.Buffer[String]()
+    while (it.hasNext) {
+      val p = it.next()
+      if (p.toString.endsWith(".scala") &&
+          new String(java.nio.file.Files.readAllBytes(p), "UTF-8").contains("WKTReader"))
+        parsers += p.toString
+    }
+    assert(parsers.size <= 1,
+      s"WKTReader in ${parsers.mkString(", ")}: route containment through graft.ops.ZonalIndex")
+  }
 }
