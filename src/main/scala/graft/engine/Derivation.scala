@@ -39,13 +39,17 @@ object Derivation {
 
   /** All units downstream of `seeds` in `edges(src, dst)`, walked up to
     * maxDepth levels (inclusive of the seeds at depth 0). Returns
-    * (unit_id, depth) with the minimal depth per unit. */
+    * (unit_id, depth) with the minimal depth per unit. Up to
+    * `driverCap` edges (default [[graft.model.DriverCap]], the size gate
+    * `Dedup.canonicalize` and `Dedup.pagerankInt` share) the walk runs
+    * on the driver; past it, as a distributed loop. */
   def transitiveDownstream(edges: DataFrame, seeds: DataFrame,
-                           maxDepth: Int, driverCap: Long = 1L << 20): DataFrame = {
+                           maxDepth: Int, driverCap: Long = graft.model.DriverCap): DataFrame = {
     val spark = edges.sparkSession
-    // ADAPTIVE, like Dedup.canonicalize (SCALE.md r9 #8): a derivation
-    // lineage graph is unit-CATALOG-sized metadata, not corpus-sized —
-    // under the cap (1M edges ≈ 16 MB) the whole walk is one driver
+    // ADAPTIVE, with the size gate Dedup.canonicalize and
+    // Dedup.pagerankInt share (SCALE.md r9 #8): a derivation lineage
+    // graph is unit-CATALOG-sized metadata, not corpus-sized — under
+    // the cap (graft.model.DriverCap edges) the whole walk is one driver
     // BFS over the collected edge list, where the distributed loop
     // would pay ~2 scheduled jobs of pure latency per depth level.
     // Past the cap the loop below runs unchanged. Exact same minima

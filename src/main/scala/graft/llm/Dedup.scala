@@ -1,7 +1,9 @@
 package graft.llm
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
+import scala.jdk.CollectionConverters._
 
 /** Near-duplicate detection for training-data pipelines:
   * word-shingle Jaccard, MinHash + LSH banding, SimHash.
@@ -218,20 +220,25 @@ object Dedup {
 
   /** [[pairJaccardHashed]] over per-document hash ARRAYS
     * ([[shingleHashArrays]] output) instead of exploded (id, h) rows.
-    * Identical jacc values — |array_intersect| of distinct arrays IS
-    * the distinct-intersection count and the array sizes ARE the set
-    * sizes — but the plan shape differs where it matters: the exploded
-    * form pays a corpus-wide distinct exchange plus a corpus-sized
-    * per-id size aggregation before any pair is scored; this form
-    * references the (never-shuffled) array frame ONCE — both pair
-    * sides reach it through one union — so the only exchange is the
-    * candidate-bounded per-pair aggregation, and the verification
-    * hashing runs in exactly one pass (guide §2.3/§2.4). Pairs whose
-    * Jaccard is 0 survive with jacc = 0.0 (the exploded form's inner
-    * intersection join drops them); callers filter on a positive
-    * threshold, where the two forms agree row-for-row.
-    * Contract: every doc_a/doc_b id must appear in `shArr` — true for
-    * LSH candidates, which by construction carry ≥ n tokens. */
+    * Identical jacc values — |array_intersect| and |array_union| are
+    * set sizes, so i / (|A| + |B| − i) is the same double — but the
+    * plan shape differs where it matters: the exploded form pays a
+    * corpus-wide distinct exchange plus a corpus-sized per-id size
+    * aggregation before any pair is scored; this form references the
+    * (never-shuffled) array frame ONCE — both pair sides reach it
+    * through one union — so the only exchange is the candidate-bounded
+    * per-pair aggregation, and the verification hashing runs in
+    * exactly one pass (guide §2.3/§2.4).
+    *
+    * Set semantics, pinned against brute-force set Jaccard by
+    * JaccardArraysSpec: one row per distinct (doc_a, doc_b); repeated
+    * hashes inside an array count once. A pair is scored only when
+    * BOTH ids are in `shArr` — a pair with a missing side is dropped,
+    * never compared with itself. Pairs whose Jaccard is 0 survive with
+    * jacc = 0.0 (the exploded form's inner intersection join drops
+    * them), and so does a pair of empty (or NULL) arrays, whose 0/0 is
+    * defined as 0.0; callers filter on a positive threshold, where the
+    * two forms agree row-for-row. `shArr` holds one row per id. */
   def pairJaccardArrays(pairs: DataFrame, shArr: DataFrame): DataFrame = {
     val legs = pairs
       .select(col("doc_a"), col("doc_b"), col("doc_a").as("id"), lit(0).as("side"))
@@ -240,11 +247,14 @@ object Dedup {
     legs.join(shArr, Seq("id"))
       .groupBy("doc_a", "doc_b")
       .agg(min_by(col("hs"), col("side")).as("ha"),
-           max_by(col("hs"), col("side")).as("hb"))
-      .withColumn("i", size(array_intersect(col("ha"), col("hb"))).cast("long"))
+           max_by(col("hs"), col("side")).as("hb"),
+           min(col("side")).as("s0"), max(col("side")).as("s1"))
+      .filter(col("s0") < col("s1")) // both legs found
+      .withColumn("i", size(array_intersect(col("ha"), col("hb"))))
+      .withColumn("u", size(array_union(col("ha"), col("hb"))))
       .select(col("doc_a"), col("doc_b"),
-        (col("i").cast("double") /
-          (size(col("ha")).cast("long") + size(col("hb")) - col("i"))).as("jacc"))
+        when(col("u") > 0, col("i").cast("double") / col("u"))
+          .otherwise(lit(0.0)).as("jacc"))
   }
 
   private def scoredJaccard(pairs: DataFrame, shh: DataFrame): DataFrame = {
@@ -271,10 +281,9 @@ object Dedup {
     *
     * ADAPTIVE: the edge set is materialized once (it is reused every
     * round regardless), and when it is small — ≤ `driverCap` edges,
-    * default 1M ≈ 16 MB of (long, long) on the driver, the same
-    * size-gated literal-backing discipline as the regrid probe cap —
-    * the whole iterative loop collapses to a single driver-side
-    * union-find: ~2 scheduled jobs instead of ~3·rounds. After LSH +
+    * default [[graft.model.DriverCap]], the size gate [[pagerankInt]]
+    * and `Derivation.transitiveDownstream` share — the whole iterative
+    * loop collapses to a single driver-side union-find: ~2 scheduled jobs instead of ~3·rounds. After LSH +
     * Jaccard verification the surviving pair set at ANY corpus scale
     * is dup-cluster-sized, orders below the corpus (at the bench it is
     * 256 pairs paying 1.1 s of pure job scheduling), so the small path
@@ -284,7 +293,7 @@ object Dedup {
     * jump loop converges to — PropertySpec's fixpoint law holds on
     * both paths. */
   def canonicalize(pairs: DataFrame, rounds: Int = 3,
-                   driverCap: Long = 1L << 20): DataFrame = {
+                   driverCap: Long = graft.model.DriverCap): DataFrame = {
     val s = pairs.sparkSession
     // ids must be integral: the long cast below would quietly NULL
     // string/UUID ids and corrupt labels far from the cause
@@ -366,39 +375,71 @@ object Dedup {
   /** Integer PageRank over an undirected pair graph (e.g. verified
     * near-dup pairs): rank duplicates by centrality so the cluster
     * representative can be the most-linked copy instead of min-id.
+    * Returns (id, pr) for every id on an edge; a pair with a NULL end
+    * is not an edge.
     *
     * All arithmetic is exact-integer so results hash cross-engine:
     * scores are scaled by 10⁶, the damping step is the exact rational
     * p' = 150000 + floor(17·s/20) (0.85 = 17/20), and per-edge
-    * contributions floor(p/deg). Each round is one equi-join + one
-    * aggregate on the edge set — the same shuffle shape as
-    * `canonicalize`, linear lineage, rounds bounded by graph diameter
-    * needs (rank, not convergence, is the goal). */
-  def pagerankInt(pairs: DataFrame, rounds: Int = 3): DataFrame = {
-    // Truncation boundary placement: edges and deg are the REUSED
-    // frames (consumed every round) — they checkpoint once. The rank
-    // chain itself is strictly linear (each p_k referenced exactly
-    // once by p_{k+1}), so with checkpointed inputs the un-truncated
-    // chain is an ordinary `rounds`-deep join stack with no subtree
-    // duplication — per-round checkpoints there only added one
-    // scheduled job per round (the historical ~3× measurement predates
-    // the edges/deg boundaries and conflated their re-derivation with
-    // chain depth; re-measured at sf0.1: chain-lazy is faster).
-    val edges = pairs.select(col("doc_a").as("u"), col("doc_b").as("v"))
-      .unionByName(pairs.select(col("doc_b").as("u"), col("doc_a").as("v")))
-      .distinct().localCheckpoint()
-    val deg = edges.groupBy(col("u").as("id")).agg(count(lit(1)).as("deg"))
-      .localCheckpoint()
-    var p = deg.select(col("id"), lit(1000000L).as("pr"))
-    for (_ <- 1 to rounds) {
-      val contrib = p.join(deg, Seq("id"))
-        .select(col("id").as("v"), floor(col("pr").cast("double") / col("deg")).cast("long").as("c"))
-      p = edges.join(contrib, Seq("v"))
-        .groupBy(col("u").as("id")).agg(sum("c").as("s"))
-        .select(col("id"),
-          (lit(150000L) + floor((col("s") * 17).cast("double") / 20).cast("long")).as("pr"))
+    * contributions floor(p/deg), over the symmetric DISTINCT edge set
+    * (rank, not convergence, is the goal: `rounds` is fixed).
+    *
+    * ADAPTIVE, with the same size gate as [[canonicalize]] and
+    * `Derivation.transitiveDownstream` (`driverCap`, default
+    * [[graft.model.DriverCap]] pairs): ONE action fetches at most
+    * driverCap + 1 pairs, and under the cap the rounds run on the
+    * driver over those rows — verified near-dup pairs are
+    * dup-cluster-sized at any corpus scale (256 at the bench, where the
+    * distributed loop paid ~20 scheduled jobs). Past the cap the
+    * distributed loop runs: the reused edge and degree frames are
+    * checkpointed once, and the strictly linear rank chain (each p_k
+    * read once by p_{k+1}) stays lazy, one equi-join + one aggregate per
+    * round. Both paths give the same rows (PageRankSpec). */
+  def pagerankInt(pairs: DataFrame, rounds: Int = 3,
+                  driverCap: Long = graft.model.DriverCap): DataFrame = {
+    val valid = pairs.filter(col("doc_a").isNotNull && col("doc_b").isNotNull)
+    val directed = valid.select(col("doc_a").as("u"), col("doc_b").as("v"))
+      .unionByName(valid.select(col("doc_b").as("u"), col("doc_a").as("v")))
+    val idType = directed.schema("u").dataType
+    val capInt = math.min(driverCap, Int.MaxValue - 1L).toInt
+    val probe = valid.select(col("doc_a").cast(idType), col("doc_b").cast(idType))
+      .limit(capInt + 1).collect()
+    if (probe.length <= capInt) {
+      val adj = scala.collection.mutable.LinkedHashMap.empty[Any,
+        scala.collection.mutable.Set[Any]]
+      probe.foreach { r =>
+        adj.getOrElseUpdate(r.get(0), scala.collection.mutable.Set.empty) += r.get(1)
+        adj.getOrElseUpdate(r.get(1), scala.collection.mutable.Set.empty) += r.get(0)
+      }
+      // the distributed loop's arithmetic: long overflow throws there
+      // under ANSI, so it throws here too
+      var pr = adj.map { case (u, _) => u -> 1000000L }
+      for (_ <- 1 to rounds) {
+        val c = adj.map { case (v, ns) => v -> math.floor(pr(v).toDouble / ns.size).toLong }
+        pr = adj.map { case (u, ns) =>
+          val sum = ns.foldLeft(0L)((acc, v) => Math.addExact(acc, c(v)))
+          u -> Math.addExact(150000L,
+            math.floor(Math.multiplyExact(sum, 17L).toDouble / 20).toLong)
+        }
+      }
+      pairs.sparkSession.createDataFrame(
+        pr.toSeq.map { case (u, p) => Row(u, p) }.asJava,
+        StructType(Seq(StructField("id", idType), StructField("pr", LongType, nullable = false))))
+    } else {
+      val edges = directed.distinct().localCheckpoint()
+      val deg = edges.groupBy(col("u").as("id")).agg(count(lit(1)).as("deg"))
+        .localCheckpoint()
+      var p = deg.select(col("id"), lit(1000000L).as("pr"))
+      for (_ <- 1 to rounds) {
+        val contrib = p.join(deg, Seq("id"))
+          .select(col("id").as("v"), floor(col("pr").cast("double") / col("deg")).cast("long").as("c"))
+        p = edges.join(contrib, Seq("v"))
+          .groupBy(col("u").as("id")).agg(sum("c").as("s"))
+          .select(col("id"),
+            (lit(150000L) + floor((col("s") * 17).cast("double") / 20).cast("long")).as("pr"))
+      }
+      p
     }
-    p
   }
 
   /** Pigeonhole-blocked candidate pairs for hamming(simhash) <= maxDist.

@@ -8,33 +8,41 @@ import org.apache.spark.sql.functions._
   * the identical md5-deterministic pipelines in SQL. */
 object DedupQueries extends QueryModule {
 
-  /** Shared materialized shingle index — several dedup operators consume
-    * the same (id, shingle) set; building it once per dataset is the
-    * multi-query analogue of a materialized CTE. */
+  /** Shared materialized shingle index — the gram-string overlap
+    * frames below ([[pairJaccOf]], [[cappedPairsOf]]) and the simhash
+    * query consume the same (id, shingle) set; building it once per
+    * dataset is the multi-query analogue of a materialized CTE. */
   private val shCache = new java.util.concurrent.ConcurrentHashMap[String, org.apache.spark.sql.DataFrame]()
   private def shinglesOf(s: org.apache.spark.sql.SparkSession, dir: String) =
     shCache.computeIfAbsent(dir, d =>
       Dedup.shingles(Tables.documents(s, d), "doc_id", "text").cache())
 
-  /** Shared LSH-verified pair frame: minhash bands → candidates → exact
-    * Jaccard. The production near-dup path (canonicalization consumes
-    * it; the all-pairs frame below exists for the exhaustive-baseline
-    * operator only). */
+  /** Shared LSH-verified pair frame (doc_a, doc_b, jacc): one-pass
+    * minhash signatures → bands → candidates, verified against per-doc
+    * distinct shingle-hash ARRAYS ([[Dedup.pairJaccardArrays]], the
+    * d_pipeline_e2e verify). No gram string, corpus-wide distinct or
+    * per-id size aggregate is built; jacc equals the oracle's
+    * md5-truncated shingle Jaccard on every pair it keeps
+    * (JaccardArraysSpec). The production near-dup path —
+    * d_minhash_lsh, d_decontaminate, d_pagerank and, through
+    * [[canonOf]], the canonicalization queries consume it; the
+    * all-pairs frame below exists for the exhaustive-baseline operator
+    * only. */
   private val lshPairsCache = new java.util.concurrent.ConcurrentHashMap[String, org.apache.spark.sql.DataFrame]()
   private def lshVerifiedOf(s: org.apache.spark.sql.SparkSession, dir: String) =
     lshPairsCache.computeIfAbsent(dir, d => {
-      val sh = shinglesOf(s, d)
-      val sig = Dedup.minhashFromText(Tables.documents(s, d), "doc_id", "text")
+      val docs = Tables.documents(s, d)
+      val sig = Dedup.minhashFromText(docs, "doc_id", "text")
       val cands = Dedup.candidatePairs(Dedup.lshBands(sig, 8, 2))
-      Dedup.pairJaccard(cands, sh).cache()
+      Dedup.pairJaccardArrays(cands, Dedup.shingleHashArrays(docs, "doc_id", "text")).cache()
     })
 
   /** Shared canonical labels (id, canonical) over the verified
-    * near-dup pairs — three queries consume the SAME pointer-jumped
-    * component labels (d_dedup_canonical, d_dedup_keep_best,
-    * d_cluster_sizes); without sharing, each re-paid the 3-round
-    * checkpointed loop per invocation. The train-once-serve-many
-    * pattern of the caches above. */
+    * near-dup pairs — three queries consume the SAME component labels
+    * (d_dedup_canonical, d_dedup_keep_best, d_cluster_sizes). The
+    * verified pair set is dup-cluster-sized, so `canonicalize` labels
+    * it with its driver-side union-find; the cache keeps the three
+    * consumers from re-paying the verify and the label jobs. */
   private val canonCache = new java.util.concurrent.ConcurrentHashMap[String, org.apache.spark.sql.DataFrame]()
   private def canonOf(s: org.apache.spark.sql.SparkSession, dir: String) =
     canonCache.computeIfAbsent(dir, d =>
@@ -167,9 +175,8 @@ object DedupQueries extends QueryModule {
       |  GROUP BY 1, 2)""".stripMargin
 
   override def queries = Map(
-    // MinHash (k=8) → LSH (4 bands × 2 rows) → exact-Jaccard verify.
-    // The shingle index is cached: signatures and verification both
-    // consume it, and recomputing the regex pipeline dominates otherwise.
+    // MinHash (k=8) → LSH (4 bands × 2 rows) → exact-Jaccard verify
+    // over per-doc shingle-hash arrays (lshVerifiedOf).
     "d_minhash_lsh" -> ((s, dir) =>
       lshVerifiedOf(s, dir).filter(col("jacc") >= 0.5)),
 
@@ -284,7 +291,9 @@ object DedupQueries extends QueryModule {
     // Duplicate-cluster centrality: integer PageRank over the verified
     // near-dup graph — the "keep the most-linked copy" alternative to
     // min-id canonicalization (a hub shared by many variants outranks a
-    // leaf that matched once).
+    // leaf that matched once). The verified pairs are fetched in one
+    // action and, being dup-cluster-sized, ranked on the driver
+    // (pagerankInt's size gate).
     "d_pagerank" -> ((s, dir) =>
       Dedup.pagerankInt(
         lshVerifiedOf(s, dir).filter(col("jacc") >= 0.5).select("doc_a", "doc_b"), 3)),

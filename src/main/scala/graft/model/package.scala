@@ -24,6 +24,13 @@ package object model {
     def clearCaches(): Unit = ()
   }
 
+  /** Default `driverCap` of the graph operators that run on the driver
+    * when their edge set is small — `Dedup.canonicalize`,
+    * `Dedup.pagerankInt` and `Derivation.transitiveDownstream`: up to
+    * 1M edges (≈ 16 MB of (long, long)) are collected and walked
+    * locally; past it each runs its distributed loop. */
+  val DriverCap: Long = 1L << 20
+
   /** Intra-query stage boundaries: `persist()` in place of the old
     * eager `localCheckpoint()` barriers. A multi-stage pipeline needs
     * each stage's output computed ONCE even when several downstream

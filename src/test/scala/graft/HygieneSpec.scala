@@ -41,4 +41,17 @@ class HygieneSpec extends AnyFunSuite {
     assert(parsers.size <= 1,
       s"WKTReader in ${parsers.mkString(", ")}: route containment through graft.ops.ZonalIndex")
   }
+
+  test("registered queries verify on the array Jaccard kernel, not gram strings") {
+    val it = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main")).iterator()
+    val callers = scala.collection.mutable.Buffer[String]()
+    while (it.hasNext) {
+      val p = it.next()
+      if (p.getFileName.toString.endsWith("Queries.scala") &&
+          new String(java.nio.file.Files.readAllBytes(p), "UTF-8").contains("Dedup.pairJaccard("))
+        callers += p.toString
+    }
+    assert(callers.isEmpty,
+      s"Dedup.pairJaccard( in ${callers.mkString(", ")}: verify with Dedup.pairJaccardArrays")
+  }
 }
