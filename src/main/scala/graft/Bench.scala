@@ -20,6 +20,32 @@ object Bench {
       name -> (System.nanoTime() - t0) / 1e9
     }
 
+  /** The timed action: a full-row write to the built-in `noop` v2 sink.
+    * It must evaluate EVERY output column: a bare count() lets Catalyst
+    * prune work whose result is unreferenced (a window or join
+    * computing a payload column drops out of the counted plan entirely
+    * — SCALE.md round-5 §7 measured a fake 5× win from exactly this).
+    * The noop sink drives full rows through a writer with no disk I/O,
+    * so the plan that runs is the plan a real consumer would pay for. */
+  def evalAll(df: org.apache.spark.sql.DataFrame): Unit =
+    df.write.mode("overwrite").format("noop").save()
+
+  /** Host-load calibration probe: a fixed-cost job (hash-sum over a
+    * generated range — no I/O, no shuffle, saturates the executor
+    * threads), timed in seconds. Its wall time moves ONLY with host
+    * conditions (co-tenancy, CPU throttling), never with engine code,
+    * so the recorded spread makes a loaded-host run self-identifying:
+    * SCALE.md r13 measured identical builds swinging 1.5-2x with zero
+    * code change, and the r13 record (54.24 s) was exactly such a run.
+    * Readers compare calib_min across rounds to normalize, instead of
+    * guessing from totals. */
+  def calibrate(spark: SparkSession): Double = {
+    val t0 = System.nanoTime()
+    spark.range(256L * 1000 * 1000)
+      .selectExpr("bit_xor(xxhash64(id))").collect() // xor: no ANSI overflow
+    (System.nanoTime() - t0) / 1e9
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     // optional args = query-name subset, for focused local iteration;
@@ -41,20 +67,6 @@ object Bench {
       Tables.read(spark, sfDir, t).count())
     Tables.events(spark, sfDir).count()
 
-    // The timed action must evaluate EVERY output column: a bare count()
-    // lets Catalyst prune work whose result is unreferenced (a window or
-    // join computing a payload column drops out of the counted plan
-    // entirely — SCALE.md round-5 §7 measured a fake 5× win from exactly
-    // this). The built-in `noop` v2 sink drives full rows through a
-    // writer with no disk I/O, so the plan that runs is the plan a real
-    // consumer would pay for.
-    // SPARK_GRAFT_BENCH_ACTION=count re-enables the old pruned-plan
-    // timing, kept ONLY so the honesty delta stays measurable; the
-    // default (and what the driver runs) is the full-row noop write.
-    def evalAll(df: org.apache.spark.sql.DataFrame): Unit =
-      if (sys.env.get("SPARK_GRAFT_BENCH_ACTION").contains("count")) { df.count(); () }
-      else df.write.mode("overwrite").format("noop").save()
-
     // Warmup pass: run every query once. First executions pay JVM JIT +
     // whole-stage-codegen compilation + shared materialized-view builds —
     // fixed per-plan constants that amortize to nothing against real data
@@ -66,30 +78,15 @@ object Bench {
     def pass() = timePass(selected.map { case (name, fn) =>
       name -> (() => evalAll(fn(spark, sfDir))) }, failed)
     val cold = pass()
-    // Host-load calibration probe: a fixed-cost job (hash-sum over a
-    // generated range — no I/O, no shuffle, saturates the executor
-    // threads) timed before every measured pass. Its wall time moves
-    // ONLY with host conditions (co-tenancy, CPU throttling), never
-    // with engine code, so the recorded spread makes a loaded-host
-    // bench self-identifying: SCALE.md r13 measured identical builds
-    // swinging 1.5-2x with zero code change, and the r13 record
-    // (54.24 s) was exactly such a run. Readers compare calib_min
-    // across rounds to normalize, instead of guessing from totals.
-    def calibrate(): Double = {
-      val t0 = System.nanoTime()
-      spark.range(256L * 1000 * 1000)
-        .selectExpr("bit_xor(xxhash64(id))").collect() // xor: no ANSI overflow
-      (System.nanoTime() - t0) / 1e9
-    }
-    calibrate() // warm the probe's own codegen before timing it
+    calibrate(spark) // warm the probe's own codegen before timing it
     // N measured passes (default 3), per-query MIN: with a documented
     // ±30% host-noise band (46.8–64.8 s across identical builds), the
     // two-pass min still carried noticeable upward noise — each extra
     // pass costs ~45 s of driver time and tightens the floor estimate
     // (min-of-N converges to steady state as N grows; heavy multi-job
-    // plans like d_pipeline_e2e keep improving past pass 3, ProfPipe14).
+    // plans like d_pipeline_e2e keep improving past pass 3).
     val nPasses = sys.env.get("SPARK_GRAFT_BENCH_PASSES").map(_.toInt).getOrElse(3)
-    val passes = Seq.fill(nPasses) { (calibrate(), pass()) }
+    val passes = Seq.fill(nPasses) { (calibrate(spark), pass()) }
     val calibs = passes.map(_._1)
     val qtimes = passes.map(_._2)
     val pinned = qtimes.head.indices.map { i =>
@@ -118,7 +115,7 @@ object Bench {
         Tables.cacheEnabled = false
         SparkEntry.clearCaches()
         val p1 = pass()
-        val c = calibrate()
+        val c = calibrate(spark)
         // clear again so the second pass also pays the shared-index
         // builds from parquet (DuckDB recomputes its CTE equivalents
         // per query; only codegen — a JVM constant, not I/O — stays

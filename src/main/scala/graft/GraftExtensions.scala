@@ -6,14 +6,12 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
 import graft.functions.{Haversine, QDotProduct, SpanHashWindows, SpanHashWindowsLong, TileStatsPartial}
 
-/** Deployment-grade wiring for the engine's native expressions:
-  * `--conf spark.sql.extensions=graft.GraftExtensions` makes
-  * `haversine_km`, `tile_stats_partial` and
-  * `span_hash_windows` available to pure-SQL users on every session of
-  * the cluster, with no driver code. `Sessions.build` registers the
-  * same builders imperatively for embedded use (`functions.Registry`);
-  * this class is the injection path a spark-submit / Thrift-server
-  * deployment uses.
+/** The one wiring path for the engine's native expressions and the
+  * as-of planner strategy: `Sessions.build` applies it through
+  * `builder.withExtensions`, and a spark-submit / Thrift-server
+  * deployment sets `--conf spark.sql.extensions=graft.GraftExtensions`.
+  * Either way `haversine_km`, `tile_stats_partial`, `span_hash_windows`
+  * and `q_dot` are callable from SQL on every session.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   import GraftExtensions._
@@ -32,8 +30,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
 }
 
 object GraftExtensions {
-  /** (name, usage, builder) triples shared by the extension injection
-    * and the imperative registry so both paths stay in sync. */
+  /** (name, usage, builder) triples the extension injects. */
   val builders: Seq[(String, String, Seq[Expression] => Expression)] = Seq(
     ("haversine_km", "haversine_km(lat1, lon1, lat2, lon2) - great-circle km",
       exprs => Haversine(exprs(0), exprs(1), exprs(2), exprs(3))),

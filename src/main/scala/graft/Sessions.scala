@@ -11,10 +11,8 @@ object Sessions {
     val builder = SparkSession.builder()
       .master(s"local[$cpus]")
       .appName("georivaspark")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus))
-      .config("spark.sql.adaptive.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_AQE", "true"))
+      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.adaptive.enabled", "true")
       // shuffles START wide and AQE coalesces them down by advisory
       // size: a fixed 32-partition width is the measured wall once a
       // single box holds >1M docs/per-stage exchange (9.5M-row
@@ -24,8 +22,7 @@ object Sessions {
       // partitions, so bench-scale plans are unchanged; at cluster
       // scale this is the standard initialPartitionNum ≫ cores setup.
       .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-        sys.env.getOrElse("SPARK_GRAFT_INIT_PARTS",
-          (math.max(1, cpus.toIntOption.getOrElse(32)) * 8).toString))
+        (math.max(1, cpus.toIntOption.getOrElse(32)) * 8).toString)
       .config("spark.sql.session.timeZone", "UTC")
       // let AQE re-plan (and in particular coalesce) the shuffle that
       // feeds a cached relation: the default false pins every .cache()d
@@ -50,6 +47,10 @@ object Sessions {
       // collection, date); inference would silently retype "2" → int
       // and break ledger/unit joins on read-back
       .config("spark.sql.sources.partitionColumnTypeInference.enabled", "false")
+      // native expressions and the as-of planner strategy: the same
+      // injection a spark-submit deployment configures through
+      // spark.sql.extensions
+      .withExtensions(new GraftExtensions)
     // A/B hook for the storage-noise study (SCALE.md): point shuffle /
     // block-manager scratch at a tmpfs (e.g. /dev/shm/graft) to take the
     // root filesystem's online-discard (TRIM) churn out of soak
@@ -58,10 +59,6 @@ object Sessions {
       builder.config("spark.local.dir", d))
     val spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    graft.functions.Registry.register(spark)
-    if (!spark.experimental.extraStrategies.contains(graft.plans.AsofJoinStrategy))
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ graft.plans.AsofJoinStrategy
     spark
   }
 }

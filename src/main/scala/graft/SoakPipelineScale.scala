@@ -25,8 +25,6 @@ object SoakPipelineScale {
       .getOrElse(Seq(50000, 200000, 1000000))
     val spark = Sessions.build(
       math.min(32, Runtime.getRuntime.availableProcessors()).toString)
-    sys.env.get("GRAFT_BLOOM_FROM_COUNT").foreach(v =>
-      spark.conf.set("graft.span.bloomFromCount", v))
 
     // 65536-word vocabulary: SoakCuration's 64-word vocab is fine at
     // 100k docs but adversarial at 1M — with 64 words there are only

@@ -26,7 +26,7 @@ object GridQueries extends QueryModule {
     * scale. Past [[LiteralBackMaxTargets]] target pixels the builder's
     * distributed frame is returned as-is (cached lazily, never
     * collected) — a 7200×3600 global target regrids through the
-    * sort-merge path with zero driver materialization (SoakRegrid). */
+    * sort-merge path with zero driver materialization (SCALE.md). */
   val LiteralBackMaxTargets = 16384L // 128×128 targets ≈ ≤262k cubic probes
 
   /** Persisted cube + overview pyramid for the s10c serve path, built

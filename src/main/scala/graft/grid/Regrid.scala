@@ -192,7 +192,7 @@ object Regrid {
     * forced into a grid-sized broadcast — the planner sort-merges or
     * shuffle-hashes on the (sy, sx) pixel key instead, which is also
     * the tile key's refinement, so a tiled source layout co-locates.
-    * SoakRegrid drives the large-target path and asserts the plan. */
+    * SCALE.md records the large-target path's plan at a 7200×3600 target. */
   def probeResample(grid: DataFrame, probes: DataFrame): DataFrame =
     grid.join(probes, col("y") === col("sy") && col("x") === col("sx"))
       .groupBy("t", "yt", "xt")

@@ -58,24 +58,13 @@ object CurationQueries extends QueryModule {
                   stage: (String, () => org.apache.spark.sql.DataFrame) =>
                     org.apache.spark.sql.DataFrame = (_, f) => f())
       : org.apache.spark.sql.DataFrame = {
-      // Boundary-fold switch (ProfPipe14, mirrors StreamCuration's
-      // foldOneShot): labels listed in graft.pipeline.foldBoundaries
-      // skip their localCheckpoint so the scheduling-floor-vs-recompute
-      // trade stays re-measurable as AQE policy evolves. Default empty:
-      // the r14 A/B (ProfPipe14, same-JVM, rotated variant order,
-      // min/med-of-5 at sf0.1) measured shipped 2.35/2.40 s with every
-      // single fold inside noise (bands 2.18/2.33, cand 2.35/2.57,
-      // shCand 2.26/2.51) and every combination much worse (b+c+s
-      // 3.15/3.51, +ids3 6.20/6.51) — unlike the endstate form (where
-      // folding sh+bands won ~10%), the boundaries here feed consumers
-      // in SEPARATE downstream jobs, so multi-fold frames re-run their
-      // subtrees instead of deduping via ReusedExchange.
-      val foldSet: Set[String] = docs.sparkSession.conf
-        .getOption("graft.pipeline.foldBoundaries")
-        .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-        .getOrElse(Set.empty)
-      def maybeChk(label: String)(df: org.apache.spark.sql.DataFrame) =
-        if (foldSet(label)) df else df.localCheckpoint()
+      // ids3, bands and cand are localCheckpoint boundaries. Folding
+      // any of them (r14, same-JVM rotated A/B at sf0.1, SCALE.md) was
+      // never faster: each single fold measured inside noise and every
+      // combination much worse (b+c+s 3.15 s, +ids3 6.20 s vs 2.35 s),
+      // because the boundaries feed consumers in SEPARATE downstream
+      // jobs, so a folded frame re-runs its subtree instead of deduping
+      // via ReusedExchange.
       // 1. exact dedup
       val keep1 = docs
         .withColumn("fp", TextAnalysis.fingerprint(col("text")))
@@ -116,49 +105,35 @@ object CurationQueries extends QueryModule {
           Dedup.spanHashes(d2, "doc_id", "text", 20, spread = false), 20,
           sizeHint = Some(docs.queryExecution.optimizedPlan.stats.sizeInBytes))
         .filter(col("coverage") > 0.5).select("doc_id")
-      val ids3 = stage("ids3 dedup+quality+span", () => maybeChk("ids3")(
+      val ids3 = stage("ids3 dedup+quality+span", () => (
         d2.select(col("doc_id"), col("source"),
             size(split(trim(col("text")), "\\s+")).cast("long").as("n_tokens"))
-          .join(heavy, Seq("doc_id"), "left_anti")))
+          .join(heavy, Seq("doc_id"), "left_anti")).localCheckpoint())
       def d3text = docs.join(ids3.select("doc_id"), Seq("doc_id"), "left_semi")
       // 4. fuzzy dedup on what's left. Signatures come from the one-pass
       // minhash kernel — a map-side projection over the survivor scan
       // (no shingle explode, no distinct, no per-doc aggregation); the
       // candidate set's shingle hashes rebuild from the source later.
-      val bands = stage("bands minhash-kernel", () => maybeChk("bands")(
+      val bands = stage("bands minhash-kernel", () =>
         Dedup.lshBands(
-          Dedup.minhashFromText(d3text, "doc_id", "text"))))
-      val cand = stage("cand candidatePairs", () => maybeChk("cand")(
-        Dedup.candidatePairs(bands)))
+          Dedup.minhashFromText(d3text, "doc_id", "text")).localCheckpoint())
+      val cand = stage("cand candidatePairs", () =>
+        Dedup.candidatePairs(bands).localCheckpoint())
       val candIds = cand.select(col("doc_a").as("doc_id"))
         .unionByName(cand.select(col("doc_b").as("doc_id"))).distinct()
-      // verification needs only HASHES: the candidate shingle frame is
-      // built as distinct 60-bit keys (no gram strings ever
-      // materialize), and the oracle collapses the same truncation.
-      // Shape switch (r15 session 2, ProfPipeVerify, N=9 and N=15
-      // rotated): default "arr" verifies against per-doc DISTINCT hash
-      // ARRAYS (pairJaccardArrays — identical jacc values, no distinct
-      // exchange, no per-id size aggregation), and because that form
-      // has exactly ONE consumer the shCand checkpoint buys no reuse —
-      // the frame stays inline and one scheduled job drops (the stage
-      // hook still wraps the lazy construction, so soak attribution
-      // moves into the final job). Measured vs the r9 exploded row
-      // form ("exploded", the escape hatch): med 1.895 → 1.807, min
-      // 1.658 → 1.529 at sf0.1; same ordering at N=9.
-      val verifyArr = docs.sparkSession.conf
-          .getOption("graft.pipeline.verifyShape") match {
-        case None | Some("arr") => true
-        case Some("exploded") => false
-        case Some(v) => throw new IllegalArgumentException(
-          s"graft.pipeline.verifyShape must be arr or exploded, got '$v'")
-      }
+      // verification needs only HASHES: per-doc DISTINCT 60-bit hash
+      // ARRAYS (no gram strings ever materialize; the oracle collapses
+      // the same truncation), scored by pairJaccardArrays — no distinct
+      // exchange, no per-id size aggregation. The frame has exactly ONE
+      // consumer, so it stays inline with no checkpoint (the stage hook
+      // still wraps the lazy construction, so soak attribution moves
+      // into the final job). Measured vs the r9 exploded row form
+      // (r15, N=9 and N=15 rotated at sf0.1): med 1.895 →
+      // 1.807 s, min 1.658 → 1.529 s.
       val candDocs = docs.join(candIds, Seq("doc_id"), "left_semi")
       val shCand = stage("shCand candidate-hashes", () =>
-        if (verifyArr) Dedup.shingleHashArrays(candDocs, "doc_id", "text")
-        else maybeChk("shCand")(
-          Dedup.shingleHashes(candDocs, "doc_id", "text", spread = false)))
-      val pairs = (if (verifyArr) Dedup.pairJaccardArrays(cand, shCand)
-                   else Dedup.pairJaccardHashed(cand, shCand))
+        Dedup.shingleHashArrays(candDocs, "doc_id", "text"))
+      val pairs = Dedup.pairJaccardArrays(cand, shCand)
         .filter(col("jacc") >= 0.5).select("doc_a", "doc_b")
       val dropFuzzy = Dedup.canonicalize(pairs)
         .filter(col("id") =!= col("canonical"))

@@ -181,26 +181,24 @@ object Dedup {
     bands.groupBy("band", "key").agg(count(lit(1)).as("n_docs"))
       .filter(col("n_docs") > maxBucket)
 
-  /** Exact Jaccard for given pairs from their distinct shingle sets.
-    * The intersection join keys on the 60-bit md5 truncation of each
-    * shingle, not the gram string — the candidate-side shuffle moves
-    * 8-byte longs (the same inverted-index key shape as
-    * [[shingleHashes]]); the md5 is a map-side projection. The oracles
-    * apply the identical truncation, so even a truncation collision
-    * (which would count one extra intersection row) is mirrored. */
-  def pairJaccard(pairs: DataFrame, sh: DataFrame): DataFrame =
-    scoredJaccard(pairs,
-      sh.select(col("id"),
-        conv(substring(md5(col("s")), 1, 15), 16, 10).cast("long").as("h")))
-
-  /** [[pairJaccard]] over an ALREADY-HASHED shingle frame (id, h) —
-    * e.g. [[shingleHashes]] output, letting a verification-only caller
-    * skip materializing gram strings entirely. Set sizes and
-    * intersections both count the given rows, so a caller handing a
-    * DISTINCT-hash frame must mirror that distinctness in its oracle
-    * (collision-collapsed on both sides). */
-  def pairJaccardHashed(pairs: DataFrame, shh: DataFrame): DataFrame =
-    scoredJaccard(pairs, shh)
+  /** Exact Jaccard for given pairs over a HASHED shingle frame (id, h)
+    * — e.g. [[shingleHashes]] output, so a verification-only caller
+    * never materializes gram strings and the intersection shuffle moves
+    * 8-byte keys. Set sizes and intersections both count the given
+    * rows, so a caller handing a DISTINCT-hash frame must mirror that
+    * distinctness in its oracle (collision-collapsed on both sides). */
+  def pairJaccardHashed(pairs: DataFrame, shh: DataFrame): DataFrame = {
+    val sizes = shh.groupBy("id").agg(count(lit(1)).as("c"))
+    val inter = pairs
+      .join(shh.select(col("id").as("doc_a"), col("h")), Seq("doc_a"))
+      .join(shh.select(col("id").as("doc_b"), col("h")), Seq("doc_b", "h"))
+      .groupBy("doc_a", "doc_b").agg(count(lit(1)).as("i"))
+    inter
+      .join(sizes.select(col("id").as("doc_a"), col("c").as("ca")), Seq("doc_a"))
+      .join(sizes.select(col("id").as("doc_b"), col("c").as("cb")), Seq("doc_b"))
+      .select(col("doc_a"), col("doc_b"),
+        (col("i").cast("double") / (col("ca") + col("cb") - col("i"))).as("jacc"))
+  }
 
   /** Per-document DISTINCT shingle-hash ARRAYS (id, hs): the same
     * 60-bit keys as [[shingleHashes]], but deduplicated per document
@@ -255,19 +253,6 @@ object Dedup {
       .select(col("doc_a"), col("doc_b"),
         when(col("u") > 0, col("i").cast("double") / col("u"))
           .otherwise(lit(0.0)).as("jacc"))
-  }
-
-  private def scoredJaccard(pairs: DataFrame, shh: DataFrame): DataFrame = {
-    val sizes = shh.groupBy("id").agg(count(lit(1)).as("c"))
-    val inter = pairs
-      .join(shh.select(col("id").as("doc_a"), col("h")), Seq("doc_a"))
-      .join(shh.select(col("id").as("doc_b"), col("h")), Seq("doc_b", "h"))
-      .groupBy("doc_a", "doc_b").agg(count(lit(1)).as("i"))
-    inter
-      .join(sizes.select(col("id").as("doc_a"), col("c").as("ca")), Seq("doc_a"))
-      .join(sizes.select(col("id").as("doc_b"), col("c").as("cb")), Seq("doc_b"))
-      .select(col("doc_a"), col("doc_b"),
-        (col("i").cast("double") / (col("ca") + col("cb") - col("i"))).as("jacc"))
   }
 
   /** Canonical representative per near-duplicate cluster: treat verified
@@ -601,6 +586,13 @@ object Dedup {
         min("id").as("first_doc"))
       .filter(col("n_docs") >= 2)
 
+  /** The span-shape size gate: estimated span bytes up to which the
+    * single-pass window shape runs (default 16 MB). Shared by
+    * [[spanCoverage]] and the one-shot stale-span gate in
+    * `streaming/StreamCuration`. */
+  def windowShapeMaxBytes(s: org.apache.spark.sql.SparkSession): Long =
+    s.conf.getOption("graft.span.windowShapeMaxBytes").map(_.toLong).getOrElse(16L << 20)
+
   /** Per-document fraction of tokens covered by cross-document
     * duplicated spans — the "how much of this doc is boilerplate"
     * filter signal. Duplicated window positions become intervals
@@ -621,7 +613,7 @@ object Dedup {
     * in-stage over AQE-sized partitions; without it the map-side
     * partial builds an input-split-sized hash map (9.5M keys/split at
     * 5M docs) that spills into sort fallback and measures 2x WORSE
-    * than the window it replaces (ProfSpan, SCALE.md). (2) The narrow
+    * than the window it replaces (SCALE.md). (2) The narrow
     * dup column materializes ONCE via a lazy localCheckpoint —
     * exchange reuse does not cross the scalar-subquery boundary, so
     * without it the whole dup pipeline evaluates twice. (3) A bloom
@@ -668,9 +660,7 @@ object Dedup {
     * trustworthy. */
   def spanCoverage(spansIn: DataFrame, w: Int = 20,
                    sizeHint: Option[BigInt] = None): DataFrame = {
-    val conf = spansIn.sparkSession.conf
-    val windowMax = conf.getOption("graft.span.windowShapeMaxBytes")
-      .map(_.toLong).getOrElse(16L << 20)
+    val windowMax = windowShapeMaxBytes(spansIn.sparkSession)
     val est = sizeHint.getOrElse(
       spansIn.queryExecution.optimizedPlan.stats.sizeInBytes)
     org.slf4j.LoggerFactory.getLogger(getClass).info(
@@ -697,37 +687,22 @@ object Dedup {
     // item) and materializes the checkpoint for its two consumers.
     // An r13 interim shape swapped the bloom for a broadcast left-semi
     // when the count was small; measured warm at 1M docs it was 1.5x
-    // SLOWER than this bloom+shuffle-semi plan (ProfIds13: 42.1 s vs
-    // 27.8 s interleaved same-JVM), so the thinning is unconditional.
-    // default on: one narrow count() over the checkpointed dup column
-    // buys exact bloom sizing. false = the r12 fixed 4M/2^25 sizing
-    // with no extra action (kept as an operational escape hatch; at
-    // bench scale the two measure within noise of each other same-JVM
-    // — ProfIds13, SCALE.md r13).
-    val sizedFromCount = conf.getOption("graft.span.bloomFromCount") match {
-      case None => true
-      case Some(v) if v.equalsIgnoreCase("true") => true
-      case Some(v) if v.equalsIgnoreCase("false") => false
-      case Some(v) => throw new IllegalArgumentException(
-        s"graft.span.bloomFromCount must be true or false, got '$v'")
-    }
-    val thinned = if (sizedFromCount) {
-      val nDup = dup.count()
-      // ~3% fpp wants n*7.3 bits; cap bounds the broadcast payload AND
-      // the per-map partial-merge traffic through the one-group reducer.
-      val wantBits = math.max(nDup * 8L, 1L << 20)
-      val bits = math.min(wantBits, 1L << 28)
-      if (bits < wantBits)
-        org.slf4j.LoggerFactory.getLogger(getClass).warn(
-          s"spanCoverage bloom capped at 2^28 bits for $nDup duplicated " +
-            "hashes; false-positive rate degrades (results stay exact " +
-            "via the semi-join) — raise the cap or partition the corpus")
-      spansIn.filter(graft.functions.BloomSemi.probe(
-          dup, "h", col("h"), items = math.max(nDup, 1L), bits = bits))
-        .join(dup, Seq("h"), "left_semi")
-    } else
-      spansIn.filter(graft.functions.BloomSemi.probe(dup, "h", col("h")))
-        .join(dup, Seq("h"), "left_semi")
+    // SLOWER than this bloom+shuffle-semi plan (42.1 s vs 27.8 s
+    // interleaved same-JVM, SCALE.md r13), so the thinning is
+    // unconditional.
+    val nDup = dup.count()
+    // ~3% fpp wants n*7.3 bits; cap bounds the broadcast payload AND
+    // the per-map partial-merge traffic through the one-group reducer.
+    val wantBits = math.max(nDup * 8L, 1L << 20)
+    val bits = math.min(wantBits, 1L << 28)
+    if (bits < wantBits)
+      org.slf4j.LoggerFactory.getLogger(getClass).warn(
+        s"spanCoverage bloom capped at 2^28 bits for $nDup duplicated " +
+          "hashes; false-positive rate degrades (results stay exact " +
+          "via the semi-join) — raise the cap or partition the corpus")
+    val thinned = spansIn.filter(graft.functions.BloomSemi.probe(
+        dup, "h", col("h"), items = math.max(nDup, 1L), bits = bits))
+      .join(dup, Seq("h"), "left_semi")
     mergedCoverage(thinned
       .select(col("id"), col("n_tokens"), col("pos").as("start"),
         (col("pos") + (w - 1)).as("fin")))

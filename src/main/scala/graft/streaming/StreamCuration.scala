@@ -172,43 +172,25 @@ object StreamCuration {
     val fp = batch.withColumn("fp", TextAnalysis.fingerprint(col("text")))
     val firstIn = fp.groupBy("fp").agg(min("doc_id").as("first_id"))
     val fpMin = fp.join(firstIn, "fp").filter(col("doc_id") === col("first_id"))
-    // One-shot plan-shape switches (r15, ProfEnd15b; same conf pattern
-    // as foldOneShot): comma list of labels, each enabling one
-    // restructure of the one-shot form. Streaming path unaffected —
-    // the set is empty when !oneShot.
-    //   fp1x     — stage 1 joins back on doc_id (min per fp group),
-    //              so the fingerprint regex+md5 runs ONE corpus pass
-    //              instead of two (the fp-keyed probe side recomputes
-    //              it; guide §1.2 don't compute twice);
-    //   spanwin  — stage 3 takes min(doc_id) over (partition by h)
-    //              instead of groupBy+join-back: one span-digest pass
-    //              instead of two and no join (§2.4 window rides the
-    //              aggregation's exchange). Size-gated like
-    //              Dedup.spanCoverage: the window sorts the exploded
-    //              span frame, which melts down past ~1M docs, so
-    //              above graft.span.windowShapeMaxBytes (batch-scan
-    //              estimate, the trustworthy signal) the scalable
-    //              groupBy+join runs unchanged;
-    //   arrverify — stage 4 verifies candidates against per-doc
-    //              DISTINCT hash ARRAYS (Dedup.pairJaccardArrays):
-    //              the corpus-wide (id, h) distinct exchange and the
-    //              corpus-sized per-id size aggregation disappear;
-    //              the only verify exchange is candidate-bounded;
-    //   k3ids    — the k3 boundary materializes (doc_id, source,
-    //              n_tokens) instead of the corpus text; stage 4
-    //              re-derives text behind an id semi-join (the
-    //              pipeline's r9 ids3 discipline).
-    val oneShotShape: Set[String] =
-      if (!oneShot) Set.empty
-      else batchIn.sparkSession.conf.getOption("graft.endstate.oneShotShape")
-        .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-        .getOrElse(Set("fp1x", "spanwin", "arrverify"))
+    // The one-shot form (r15, same-JVM rotated A/Bs, SCALE.md) takes
+    // three restructures the streaming path cannot:
+    //   - stage 1 joins back on doc_id (min per fp group), so the
+    //     fingerprint regex+md5 runs ONE corpus pass instead of two;
+    //   - stage 3 takes min(doc_id) over (partition by h) instead of
+    //     groupBy+join-back: one span-digest pass and no join.
+    //     Size-gated like Dedup.spanCoverage: the window sorts the
+    //     exploded span frame, which melts down past ~1M docs, so
+    //     above graft.span.windowShapeMaxBytes (batch-scan estimate,
+    //     the trustworthy signal) the scalable groupBy+join runs;
+    //   - stage 4 verifies candidates against per-doc DISTINCT hash
+    //     ARRAYS (Dedup.pairJaccardArrays): the corpus-wide (id, h)
+    //     distinct exchange and the per-id size aggregation disappear.
     // Known-empty state: every state-side subtree below is skipped —
     // an anti/semi join against an empty relation is a no-op by value
     // but still costs plan nodes, a broadcast of nothing, and (for
     // the checkpointed stateTouched) a whole scheduled job.
     val k1 = (if (!hasState) {
-      if (oneShotShape("fp1x"))
+      if (oneShot)
         // min(doc_id) per fp group ≡ "doc_id == first_id of its own
         // fp" (each doc_id appears once), so the semi-join keeps
         // exactly fpMin's rows — but the probe side is the raw batch,
@@ -241,31 +223,6 @@ object StreamCuration {
     def streamChk(label: String)(df: DataFrame): DataFrame =
       if (oneShot) df else chk(label)(df)
 
-    // One-shot boundary folding. The r8 "folding buys nothing" negative
-    // was re-measured in r14 under the current wide-start AQE policy
-    // (ProfEndstate14, same-JVM, rotated variant order to kill the
-    // warmup-ordering bias a first fixed-order run suffered; 7 rounds
-    // at sf0.1): folding sh AND bands together is ~10% faster (med
-    // 3.58 s vs 3.97 s shipped, min 3.21 vs 3.37) — their
-    // multi-consumer subtrees meet inside the final job where
-    // ReusedExchange dedupes them, and two scheduled jobs plus two
-    // batch-sized materializations drop. Folding either alone is
-    // neutral. Folding k3 is ~75% WORSE (med 6.98 s): its consumers
-    // (sh/sig/kept) each re-run the heavy span-coverage anti-join
-    // subtree, which no exchange reuse spans.
-    // So the one-shot default folds sh+bands and keeps k3; the conf
-    // (comma list of labels, "" = fold nothing) remains the experiment
-    // override. The streaming path never folds: saveDeltas consumes
-    // these frames in separate jobs where an unchecked frame re-runs
-    // its subtree.
-    val foldSet: Set[String] =
-      if (!oneShot) Set.empty
-      else batchIn.sparkSession.conf.getOption("graft.endstate.foldOneShot")
-        .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-        .getOrElse(Set("sh", "bands"))
-    def boundaryChk(label: String)(df: DataFrame): DataFrame =
-      if (foldSet(label)) df else chk(label)(df)
-
     // -- stage 2: quality gate (stateless). Materialized once: spans,
     // the stage-3 filter, and the state delta all consume it.
     val k2 = streamChk("k2")(
@@ -278,12 +235,8 @@ object StreamCuration {
       Dedup.spanWindows(k2.select(col("doc_id"), col("text")),
         "text", SpanW, keep = Seq("doc_id")))
     val staleInBatch =
-      if (oneShotShape("spanwin") && {
-        val windowMax = batchIn.sparkSession.conf
-          .getOption("graft.span.windowShapeMaxBytes")
-          .map(_.toLong).getOrElse(16L << 20)
-        batch.queryExecution.optimizedPlan.stats.sizeInBytes <= windowMax
-      }) {
+      if (oneShot && batch.queryExecution.optimizedPlan.stats.sizeInBytes <=
+          Dedup.windowShapeMaxBytes(batchIn.sparkSession)) {
         // window form: ONE span-digest pass, no join-back — min over
         // the h partition includes the row itself, so doc_id > min ⇔
         // doc_id > h_first exactly
@@ -326,25 +279,7 @@ object StreamCuration {
         (col("pos") + (SpanW - 1)).as("fin")))
       .filter(col("coverage") > StaleCoverageMax)
       .select("doc_id")
-    // k3ids (one-shot label, A/B'd by ProfEnd15b): materialize only
-    // (doc_id, source, n_tokens) at the k3 boundary — the shape the
-    // batch pipeline's ids3 boundary adopted in r9 ("never checkpoint
-    // the corpus text") — and re-derive text for the stage-4 hashers
-    // behind an id semi-join against the source scan. At 100 TB a
-    // column-pruned compressed re-scan strictly beats writing the
-    // corpus into the block store and reading it back; n_tokens rides
-    // the same scan that evaluates the gates, so `kept` needs no text.
-    val k3full = k2.join(heavy, Seq("doc_id"), "left_anti")
-    val k3idsOpt: Option[DataFrame] =
-      if (oneShotShape("k3ids"))
-        Some(boundaryChk("k3")(k3full.select(col("doc_id"), col("source"),
-          TextAnalysis.tokenCountWs(col("text")).cast("long").as("n_tokens"))))
-      else None
-    val k3 = k3idsOpt match {
-      case Some(ids) =>
-        batch.join(ids.select("doc_id"), Seq("doc_id"), "left_semi")
-      case None => boundaryChk("k3")(k3full)
-    }
+    val k3 = chk("k3")(k2.join(heavy, Seq("doc_id"), "left_anti"))
 
     // -- stage 4: fuzzy dedup. Candidates through shared LSH band keys
     // only — in-batch pairs via the capped generator, cross-batch pairs
@@ -379,18 +314,17 @@ object StreamCuration {
     // (id, gram-string) rows — the distinct exchange and the two
     // pairJaccard probe joins move 8-byte keys, never ~50-byte gram
     // strings, and no gram string ever materializes (guide §2.3
-    // shuffle keys, not payloads). ProfS4 (same-JVM rotated, sf0.1):
+    // shuffle keys, not payloads). Same-JVM rotated at sf0.1 (r15):
     // the candidate+verify chain drops 1.78 → 1.09 s med. The oracle
     // applies the IDENTICAL truncation on both the set sizes and the
     // intersection, so the cross-engine gate stays exact even on a
     // (within-doc) truncation collision — measured zero such
     // collisions at every test SF, so results are bit-identical to
     // the string form.
-    // lazy: the one-shot arrverify shape never consumes the exploded
-    // frame (its verification reads per-doc hash arrays instead), and
-    // an unused eager boundaryChk would still schedule a checkpoint
-    // job under the foldNone probe conf
-    lazy val sh = boundaryChk("sh")(
+    // lazy: only the streaming path consumes it — the one-shot form
+    // verifies on per-doc hash arrays, and an unused eager chk would
+    // still schedule a checkpoint job
+    lazy val sh = chk("sh")(
       Dedup.shingleHashes(k3.select("doc_id", "text"), "doc_id", "text", spread = false))
     // signatures from the one-pass minhash kernel (bit-identical to the
     // shingle-aggregate form, MinhashSlotsSpec): the sig path costs one
@@ -401,8 +335,12 @@ object StreamCuration {
     // capped generation, cross-batch probe) — on the STREAMING path,
     // materialize IT, never the state-sized union (a checkpoint of
     // state ∪ batch would copy the whole corpus index every batch).
-    // The one-shot form folds it (with sh) by default — see foldSet.
-    val bands = boundaryChk("bands")(Dedup.lshBands(sig, 8, 2))
+    // The one-shot form folds it: its consumers meet inside the final
+    // job, where ReusedExchange dedupes them (r14 same-JVM rotated A/B
+    // at sf0.1: med 3.58 s vs 3.97 s checkpointed). k3 stays a
+    // boundary in both forms — folding it re-runs the span-coverage
+    // anti-join under each consumer (med 6.98 s).
+    val bands = streamChk("bands")(Dedup.lshBands(sig, 8, 2))
     // The combined-index cap only matters for buckets the BATCH
     // touches: a bucket with no batch member generates no new pair on
     // either the in-batch or cross-batch side, so its hotness is
@@ -432,10 +370,10 @@ object StreamCuration {
         // [hotBuckets count pass → anti-join → candidatePairs pass],
         // dropping one corpus-band aggregation and one anti-join from
         // the one-shot final job (§2.4 remove shuffles outright; r15,
-        // ProfEnd15 A/B'd with the endstate row).
+        // A/B'd with the endstate row).
         val cands = Dedup.candidatePairs(bands, maxBucket)
         val inVerified =
-          if (oneShotShape("arrverify"))
+          if (oneShot)
             // per-doc distinct hash arrays: identical jacc values
             // (see pairJaccardArrays), no corpus-wide verify exchange
             Dedup.pairJaccardArrays(cands,
@@ -469,12 +407,9 @@ object StreamCuration {
         inVerified.select(col("doc_b").as("doc_id"))
           .unionByName(oldVerified.select(col("doc_b").as("doc_id"))).distinct()
     }
-    val kept = k3idsOpt match {
-      case Some(ids) => ids.join(drop, Seq("doc_id"), "left_anti")
-      case None => k3.join(drop, Seq("doc_id"), "left_anti")
-        .select(col("doc_id"), col("source"),
-          TextAnalysis.tokenCountWs(col("text")).cast("long").as("n_tokens"))
-    }
+    val kept = k3.join(drop, Seq("doc_id"), "left_anti")
+      .select(col("doc_id"), col("source"),
+        TextAnalysis.tokenCountWs(col("text")).cast("long").as("n_tokens"))
 
     val deltas = State(
       fps = fp.select("fp").distinct(),

@@ -63,34 +63,6 @@ object StreamIndex {
   private def fsOf(s: SparkSession, p: Path) =
     p.getFileSystem(s.sparkContext.hadoopConfiguration)
 
-  /** Pre-train and freeze the coarse quantizer on a REPRESENTATIVE
-    * sample, before any batch arrives — the production FAISS pattern
-    * (`train()` on a corpus sample, then add). Training on the first
-    * batch alone (the [[processBatch]] fallback) is only as good as
-    * that batch's coverage: under topic-drift arrival, unseen topics
-    * crowd into whichever frozen cells sit nearest and the per-batch
-    * pruned state read creeps toward corpus-sized (SoakSemdedup's
-    * "local" geometry measures exactly this). The sample rows are NOT
-    * added to any list — they arrive later through their own batches.
-    * Idempotent: re-training overwrites the same deterministic
-    * centroids; an existing quantizer is left untouched unless
-    * `overwrite`. */
-  def trainQuantizer(sample: DataFrame, dir: String,
-                     k: Int = Auto, iters: Int = Iters,
-                     overwrite: Boolean = false): Unit = {
-    val s = sample.sparkSession
-    import s.implicits._
-    val centPath = new Path(s"$dir/centroids")
-    val fs = fsOf(s, centPath)
-    if (!fs.exists(centPath) || overwrite) {
-      val kEff = if (k > 0) k else Similarity.cellCount(sample.count())
-      val trained = Similarity.ivfKmeansCentroids(sample, kEff, iters)
-        .collect().map(r => (r.getInt(0), r.getSeq[Long](1), r.getLong(2)))
-        .toSeq.toDF("cid", "cq", "cnrm2")
-      trained.write.mode("overwrite").parquet(centPath.toString)
-    }
-  }
-
   /** Absorb one batch of quantized vectors `(vec_id, q, nrm2)` into the
     * index at `dir`: train-and-freeze centroids if this is the first
     * batch, then broadcast-assign and append to the cell partitions.

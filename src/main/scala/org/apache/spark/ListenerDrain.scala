@@ -1,7 +1,7 @@
 package org.apache.spark
 
-/** Test access to the listener bus, which is private to Spark: blocks
-  * until every event posted so far has reached the listeners, so a
+/** Access to the listener bus, which is private to Spark: blocks until
+  * every event posted so far has reached the listeners, so a
   * listener's counts are complete when read. */
 object ListenerDrain {
   def apply(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()

@@ -1,11 +1,12 @@
 package graft
 
-/** Both SQL-function wiring paths: the imperative registry used by
-  * embedded sessions, and the spark.sql.extensions injection a
-  * spark-submit deployment configures. */
+/** The one SQL-function wiring path, GraftExtensions: applied by
+  * `Sessions.build` through `builder.withExtensions`, and the same
+  * injection a spark-submit deployment configures with
+  * spark.sql.extensions. */
 class ExtensionsSpec extends SparkSpec {
 
-  test("Registry path: native expressions callable from SQL on the shared session") {
+  test("native expressions come through the extension on the Sessions.build session") {
     val h = spark.sql("SELECT span_hash_windows(array('a','b','c'), 2) AS h")
       .collect()(0).getSeq[String](0)
     assert(h.length == 2)
@@ -18,6 +19,20 @@ class ExtensionsSpec extends SparkSpec {
     val km = spark.sql("SELECT haversine_km(0D, 0D, 0D, 1D) AS km")
       .collect()(0).getDouble(0)
     assert(math.abs(km - 111.19) < 0.5, s"got $km")
+    // the extension's planner strategy is live on the same session: an
+    // as-of plan node plans as the native exec (no strategy, no plan)
+    import spark.implicits._
+    val left = Seq((1L, 10L, 100L)).toDF("k", "lt", "id")
+    val right = Seq((1L, 5L, "a")).toDF("k", "rt", "p")
+    val asof = graft.plans.AsofJoinNative.asof(left, right, "k", "lt", "rt", Seq("p"))
+    assert(asof.collect().map(_.getAs[String]("asof_p")).toSeq == Seq("a"))
+    val plan = asof.queryExecution.executedPlan
+    val execs = new org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {}
+      .collect(plan) {
+        case e: graft.plans.AsofJoinExec => e
+        case e: graft.plans.BroadcastAsofJoinExec => e
+      }
+    assert(execs.nonEmpty, s"AsofJoinStrategy not applied:\n$plan")
   }
 
   test("GraftExtensions path: injected builders register and build real expressions") {

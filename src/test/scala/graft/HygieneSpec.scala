@@ -54,4 +54,35 @@ class HygieneSpec extends AnyFunSuite {
     assert(callers.isEmpty,
       s"Dedup.pairJaccard( in ${callers.mkString(", ")}: verify with Dedup.pairJaccardArrays")
   }
+
+  private def mainSources(root: String): Seq[(java.nio.file.Path, String)] = {
+    val it = java.nio.file.Files.walk(java.nio.file.Paths.get(root)).iterator()
+    val out = scala.collection.mutable.Buffer[(java.nio.file.Path, String)]()
+    while (it.hasNext) {
+      val p = it.next()
+      if (p.toString.endsWith(".scala"))
+        out += p -> new String(java.nio.file.Files.readAllBytes(p), "UTF-8")
+    }
+    out.toSeq
+  }
+
+  test("only the kept entry points and Lab define a main") {
+    val kept = Set("Bench", "Verify", "SparkEntry", "GenScale", "SoakPipelineScale",
+      "SoakGrid", "SoakVds", "SoakAnn", "SoakCuration", "Lab")
+    val mains = mainSources("src/main/scala/graft")
+      .collect { case (p, src) if src.contains("def main(") =>
+        p.getFileName.toString.stripSuffix(".scala") }
+    assert(mains.nonEmpty && mains.toSet.subsetOf(kept),
+      s"unexpected main objects ${mains.filterNot(kept).mkString(", ")}: " +
+        "measure with graft.Lab instead of adding a one-off main")
+  }
+
+  test("graft.* conf keys are limited to the two live switches") {
+    val allowed = Set("graft.span.windowShapeMaxBytes", "graft.engine.migrateFlatLayout")
+    val keys = mainSources("src/main").flatMap { case (_, src) =>
+      "\"(graft\\.[a-zA-Z.]+)\"".r.findAllMatchIn(src).map(_.group(1)) }.toSet
+    assert(keys.subsetOf(allowed),
+      s"new graft.* conf keys ${(keys -- allowed).mkString(", ")}: a settled switch " +
+        "collapses to its winner")
+  }
 }

@@ -14,7 +14,7 @@ class DedupCrossSpec extends SparkSpec {
   private lazy val enginePairs: Set[(Long, Long)] = {
     val sh = Dedup.shingles(docs, "doc_id", "text").cache()
     val cands = Dedup.candidatePairs(Dedup.lshBands(Dedup.minhashSignature(sh, 8), 8, 2))
-    Dedup.pairJaccard(cands, sh).filter(col("jacc") >= 0.8)
+    JaccardRef.pairJaccard(cands, sh).filter(col("jacc") >= 0.8)
       .select("doc_a", "doc_b").as[(Long, Long)].collect().toSet
   }
 

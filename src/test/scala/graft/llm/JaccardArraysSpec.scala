@@ -70,7 +70,7 @@ class JaccardArraysSpec extends SparkSpec {
         df.filter(col("jacc") >= 0.5).as[(Long, Long, Double)].collect().toSet
       val arr = verified(Dedup.pairJaccardArrays(cands,
         Dedup.shingleHashArrays(docs, "doc_id", "text")))
-      val str = verified(Dedup.pairJaccard(cands, Dedup.shingles(docs, "doc_id", "text")))
+      val str = verified(JaccardRef.pairJaccard(cands, Dedup.shingles(docs, "doc_id", "text")))
       assert(arr.nonEmpty)
       assert(arr == str, s"array-only ${arr -- str}; string-only ${str -- arr}")
       DedupQueries.evictCaches(sf0001)

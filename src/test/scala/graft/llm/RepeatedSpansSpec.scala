@@ -72,9 +72,9 @@ class RepeatedSpansSpec extends SparkSpec {
     }
   }
 
-  test("all three adaptive shapes agree: window, count-sized bloom, fixed-sizing bloom") {
+  test("both adaptive shapes agree: window and count-sized bloom") {
     // spanCoverage picks its plan shape from size estimates/confs; the
-    // three shapes must be result-identical on a corpus with known
+    // two shapes must be result-identical on a corpus with known
     // coverage (docs 1,2 fully duplicated; 4,5 share one island).
     val t = w(22, "s"); val shared = w(20, "p")
     val docs = Seq(
@@ -89,14 +89,10 @@ class RepeatedSpansSpec extends SparkSpec {
     val window = run() // tiny estimate → window shape
     spark.conf.set("graft.span.windowShapeMaxBytes", "0")
     val bloom = run() // scalable shape: count-sized bloom + shuffle semi
-    spark.conf.set("graft.span.bloomFromCount", "false")
-    val fixed = run() // escape hatch: fixed-sizing bloom, no count action
-    spark.conf.unset("graft.span.bloomFromCount")
     spark.conf.unset("graft.span.windowShapeMaxBytes")
     assert(window.keySet == Set(1L, 2L, 4L, 5L))
     assert(window(4L)._1 == 20L && window(1L)._2 == 1.0)
     assert(bloom == window)
-    assert(fixed == window)
   }
 
   test("coverage with a gap counts both islands once each") {

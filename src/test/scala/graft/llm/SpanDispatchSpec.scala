@@ -68,26 +68,4 @@ class SpanDispatchSpec extends SparkSpec {
         "est just past max must dispatch scalable")
     } finally spark.conf.unset("graft.span.windowShapeMaxBytes")
   }
-
-  test("bloomFromCount=false drops the sizing count but keeps bloom + semi") {
-    val spans = Dedup.spanHashes(docs, "doc_id", "text", 20)
-    spark.conf.set("graft.span.bloomFromCount", "FALSE") // case-insensitive
-    try {
-      val plan = planOf(Dedup.spanCoverage(spans, 20,
-        sizeHint = Some(BigInt(Long.MaxValue))))
-      assert(isScalable(plan))
-    } finally spark.conf.unset("graft.span.bloomFromCount")
-  }
-
-  test("malformed bloomFromCount fails loud with the conf key in the message") {
-    val spans = Dedup.spanHashes(docs, "doc_id", "text", 20)
-    spark.conf.set("graft.span.bloomFromCount", "yes")
-    try {
-      val e = intercept[IllegalArgumentException] {
-        Dedup.spanCoverage(spans, 20, sizeHint = Some(BigInt(Long.MaxValue)))
-      }
-      assert(e.getMessage.contains("graft.span.bloomFromCount"))
-      assert(e.getMessage.contains("yes"))
-    } finally spark.conf.unset("graft.span.bloomFromCount")
-  }
 }

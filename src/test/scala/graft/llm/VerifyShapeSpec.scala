@@ -9,9 +9,7 @@ import org.apache.spark.sql.functions._
   * [[Dedup.pairJaccardArrays]] scores every pair with the identical
   * jacc value as [[Dedup.pairJaccardHashed]] (the array form keeps
   * intersection-free pairs at jacc 0.0, which any positive threshold
-  * then drops — asserted too). The one-shot endstate with every
-  * `graft.endstate.oneShotShape` switch on must be row-identical to
-  * the switches-off form. */
+  * then drops — asserted too). */
 class VerifyShapeSpec extends SparkSpec {
 
   private def docs = spark.createDataFrame(Seq(
@@ -53,21 +51,5 @@ class VerifyShapeSpec extends SparkSpec {
       assert(v == 0.0, s"pair $k present only in array form must be 0.0, got $v")
     // (1,4) is an exact dup: jacc 1.0; (1,3) shares nothing: 0.0
     assert(arr((1L, 4L)) == 1.0 && arr((1L, 3L)) == 0.0)
-  }
-
-  test("one-shot endstate: every oneShotShape switch on == all off") {
-    val base = graft.Tables.documents(spark, "/root/testdata/sf0.001")
-    def run(shape: String) = {
-      spark.conf.set("graft.endstate.oneShotShape", shape)
-      try graft.streaming.StreamCuration.endstateBatch(base).collect()
-        .map(r => (r.getLong(0), r.getString(1), r.getLong(2))).toSet
-      finally spark.conf.unset("graft.endstate.oneShotShape")
-    }
-    val off = run("")
-    val on = run("fp1x,spanwin,arrverify")
-    assert(on == off, "shape switches must not change the kept set")
-    val onIds = run("fp1x,spanwin,arrverify,k3ids")
-    assert(onIds == off, "k3ids must not change the kept set")
-    assert(off.nonEmpty)
   }
 }

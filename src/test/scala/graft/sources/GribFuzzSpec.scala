@@ -49,7 +49,11 @@ class GribFuzzSpec extends AnyFunSuite {
       "lcc+j2k" -> Grib2.write(lcc, packing = 40),
       "gauss+ccsds" -> Grib2.write(gauss, packing = 42),
       "prob-4.9" -> Grib2.write(latlon, productTemplate = 9),
-      "ens-4.1" -> Grib2.write(latlon, productTemplate = 1, ensMember = 7))
+      "ens-4.1" -> Grib2.write(latlon, productTemplate = 1, ensMember = 7),
+      "pct-4.10" -> Grib2.write(latlon, productTemplate = 10),
+      // 5.200 over few integer levels: long runs, multi-digit run lengths
+      "runlength-levels" -> Grib2.write(latlon.copy(raster = latlon.raster.copy(
+        data = data.map(v => if (v.isNaN) v else (v % 8).floor))), packing = 200))
   }
 
   test("byte-flipped granules decode or throw — never hang, never huge allocs") {

@@ -169,6 +169,34 @@ class RasterFuzzSpec extends AnyFunSuite {
       west = -180.0, north = 90.0, px = 45.0, py = 60.0, table = 128,
       param = 11, refTime = java.time.LocalDateTime.of(1992, 3, 1, 0, 0),
       forecastHours = 6)
+    // GRIB1 simple, second-order, predefined-grid and spectral-complex
+    // packings, and an HDF5 layout-v4 extensible-array index
+    val g1msg = Grib2.Message(GeoTiff.Raster(w, h, data, -180.0, 90.0, 15.0, 11.25),
+      discipline = 255, category = 128, parameter = 11,
+      refTime = java.time.LocalDateTime.of(2000, 1, 1, 0, 0), forecastHours = 12)
+    val g1Predefined = {
+      val d = 2.5; val gw = 144; val gh = 73
+      Grib1.write(g1msg.copy(raster = GeoTiff.Raster(gw, gh,
+        Array.tabulate(gw * gh)(i => 220f + (i % 101) * 0.25f),
+        -d / 2, 90 + d / 2, d, d)), predefinedGrid = Some(2))
+    }
+    val g1SpectralComplex = {
+      val j = 8
+      val coefs = scala.collection.mutable.ArrayBuffer[Double]()
+      for (mm <- 0 to j; nn <- mm to j) {
+        coefs += (if (nn == 0 && mm == 0) 250.0 else 1.0 / ((nn + 1) * (nn + 1)))
+        coefs += 0.2 / (nn + mm + 2)
+      }
+      Grib1.writeSpectralComplex(coefs.toArray, j, j, subJ = 3, p = 0.5, 128, 130,
+        java.time.LocalDateTime.of(1989, 7, 15, 0, 0), 0)
+    }
+    val h5LayoutV4 = Hdf5.write(
+      Seq("time" -> 3, "lat" -> 5, "lon" -> 7),
+      Seq(NetCdf.Variable("lat", Seq("lat"), lat5, None),
+        NetCdf.Variable("lon", Seq("lon"), lon7, None),
+        NetCdf.Variable("precip", Seq("time", "lat", "lon"),
+          Array.tabulate(3 * 5 * 7)(i => i * 0.25f), Some(-9999f))),
+      layoutV4 = Some(4))
     Seq("tiff-strip" -> strip, "tiff-cog" -> cog, "tiff-cog-f64" -> cog64,
       "tiff-cog-packbits" -> cogPb, "tiff-cog-jpeg" -> cogJpeg,
       "tiff-cog-sparse" -> cogSparse,
@@ -179,7 +207,12 @@ class RasterFuzzSpec extends AnyFunSuite {
       "hdf5-nbit" -> h5Nbit, "hdf5-scaleoffset" -> h5So,
       "grib1-thinned" -> g1Thinned, "grib1-spectral" -> g1Spectral,
       "grib2-spectral" -> g2Spectral,
-      "grib2-spectral-complex" -> g2Spectral51)
+      "grib2-spectral-complex" -> g2Spectral51,
+      "grib1-simple" -> Grib1.write(g1msg),
+      "grib1-secondorder" -> Grib1.writeSecondOrder(g1msg),
+      "grib1-predefined" -> g1Predefined,
+      "grib1-spectral-complex" -> g1SpectralComplex,
+      "hdf5-layoutv4-ea" -> h5LayoutV4)
   }
 
   private def decodeAny(label: String, bytes: Array[Byte]): Unit = label match {
