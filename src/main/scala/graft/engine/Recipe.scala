@@ -362,8 +362,8 @@ class AnomalyRecipe(clim: DataFrame) extends Recipe {
   * carry a `level` column, only the configured levels participate
   * (service.py:158-175 groups boundaries by level), and each granule fans
   * out into per-(level, boundary, t) gold rows. The level is part of the
-  * grouping key of ONE broadcast join — the pixel scan is paid once, not
-  * once per level. */
+  * key of ONE zonal index — the pixel scan is paid once, not once per
+  * level. `transform` runs the zonal scan job when called. */
 class ZonalStatsRecipe(boundaries: DataFrame, levels: Seq[Int] = Nil) extends Recipe {
   val name = "zonal_stats"; val version = 1
   private val bound =

@@ -16,14 +16,14 @@ import org.apache.spark.sql.types._
   * the slots it belongs to (`array<int>`, each in [0, nSlots)) and a
   * value, and the result holds one stats struct per slot, in slot order.
   *
-  * It is the reduce of zonal statistics: grouped by timestep, one
-  * exchange yields every (boundary, timestep) row, and a slot no row
-  * reached comes out all NULL. A slot some row reached has `zcount` = the
-  * count of its non-NULL values, 0 when every value was NULL; its other
-  * fields follow `avg`, `min`, `max`, `sum` and `stddev_pop` over them
-  * (`zmean` = sum / count, `zstd` from Welford moments merged as Spark's
-  * central-moment aggregates merge them, min/max ordered as SQL orders
-  * doubles).
+  * It is the distributed path of zonal statistics (`graft.ops.Zonal`):
+  * grouped by timestep, one exchange yields every (boundary, timestep)
+  * row, and a slot no row reached comes out all NULL. A slot some row
+  * reached has `zcount` = the count of its non-NULL values, 0 when every
+  * value was NULL; its other fields follow `avg`, `min`, `max`, `sum`
+  * and `stddev_pop` over them (`zmean` = sum / count, `zstd` from
+  * Welford moments merged as Spark's central-moment aggregates merge
+  * them, min/max ordered as SQL orders doubles).
   *
   * The buffer is sparse (slot → accumulator), so its memory and the
   * partial aggregates it ships scale with the slots a task reached, not
@@ -57,48 +57,15 @@ case class SlotStats(slots: Expression, value: Expression, nSlots: Int,
     buf
   }
 
-  override def merge(buf: mutable.LongMap[Acc], other: mutable.LongMap[Acc]): mutable.LongMap[Acc] = {
-    other.foreachEntry { (k, acc) =>
-      buf.get(k) match {
-        case Some(mine) => mine.merge(acc)
-        case None => buf.update(k, acc)
-      }
-    }
-    buf
-  }
+  override def merge(buf: mutable.LongMap[Acc], other: mutable.LongMap[Acc]): mutable.LongMap[Acc] =
+    SlotStats.mergeInto(buf, other)
 
   override def eval(buf: mutable.LongMap[Acc]): Any =
-    new GenericArrayData(Array.tabulate[Any](nSlots) { i =>
-      buf.get(i.toLong) match {
-        case None => SlotStats.nullRow
-        case Some(a) if a.n == 0 => InternalRow(null, null, null, null, null, 0L)
-        case Some(a) => InternalRow(a.sum / a.n, a.min, a.max, a.sum,
-          math.sqrt(a.m2 / a.n), a.n)
-      }
-    })
+    new GenericArrayData(Array.tabulate[Any](nSlots)(i => SlotStats.stats(buf.getOrNull(i.toLong))))
 
-  override def serialize(buf: mutable.LongMap[Acc]): Array[Byte] = {
-    val bb = ByteBuffer.allocate(4 + buf.size * SlotStats.EntryBytes)
-    bb.putInt(buf.size)
-    buf.foreachEntry { (k, a) =>
-      bb.putInt(k.toInt).putLong(a.n).putDouble(a.sum).putDouble(a.min)
-        .putDouble(a.max).putDouble(a.mean).putDouble(a.m2)
-    }
-    bb.array()
-  }
+  override def serialize(buf: mutable.LongMap[Acc]): Array[Byte] = SlotStats.encode(buf)
 
-  override def deserialize(bytes: Array[Byte]): mutable.LongMap[Acc] = {
-    val bb = ByteBuffer.wrap(bytes)
-    val buf = mutable.LongMap.empty[Acc]
-    for (_ <- 0 until bb.getInt()) {
-      val k = bb.getInt().toLong
-      val a = new Acc
-      a.n = bb.getLong(); a.sum = bb.getDouble(); a.min = bb.getDouble()
-      a.max = bb.getDouble(); a.mean = bb.getDouble(); a.m2 = bb.getDouble()
-      buf.update(k, a)
-    }
-    buf
-  }
+  override def deserialize(bytes: Array[Byte]): mutable.LongMap[Acc] = SlotStats.decode(bytes)
 
   override def withNewMutableAggBufferOffset(o: Int): SlotStats = copy(mutableAggBufferOffset = o)
   override def withNewInputAggBufferOffset(o: Int): SlotStats = copy(inputAggBufferOffset = o)
@@ -114,6 +81,51 @@ object SlotStats {
 
   private val nullRow = InternalRow(null, null, null, null, null, null)
   private val EntryBytes = 4 + 8 * 6
+
+  /** One slot's stats struct: all NULL when no row reached the slot
+    * (`acc` is null), `zcount` 0 and the rest NULL when every value it
+    * got was NULL. */
+  def stats(acc: Acc): InternalRow =
+    if (acc == null) nullRow
+    else if (acc.n == 0) InternalRow(null, null, null, null, null, 0L)
+    else InternalRow(acc.sum / acc.n, acc.min, acc.max, acc.sum, math.sqrt(acc.m2 / acc.n), acc.n)
+
+  /** Merges `other`'s accumulators into `buf` (taking over the ones
+    * `buf` lacks); returns `buf`. */
+  def mergeInto(buf: mutable.LongMap[Acc], other: mutable.LongMap[Acc]): mutable.LongMap[Acc] = {
+    other.foreachEntry { (k, acc) =>
+      buf.get(k) match {
+        case Some(mine) => mine.merge(acc)
+        case None => buf.update(k, acc)
+      }
+    }
+    buf
+  }
+
+  /** Slot → accumulator map in a compact binary form: the aggregate's
+    * partials and the zonal reducer's task results. */
+  def encode(buf: mutable.LongMap[Acc]): Array[Byte] = {
+    val bb = ByteBuffer.allocate(4 + buf.size * EntryBytes)
+    bb.putInt(buf.size)
+    buf.foreachEntry { (k, a) =>
+      bb.putInt(k.toInt).putLong(a.n).putDouble(a.sum).putDouble(a.min)
+        .putDouble(a.max).putDouble(a.mean).putDouble(a.m2)
+    }
+    bb.array()
+  }
+
+  def decode(bytes: Array[Byte]): mutable.LongMap[Acc] = {
+    val bb = ByteBuffer.wrap(bytes)
+    val buf = mutable.LongMap.empty[Acc]
+    for (_ <- 0 until bb.getInt()) {
+      val k = bb.getInt().toLong
+      val a = new Acc
+      a.n = bb.getLong(); a.sum = bb.getDouble(); a.min = bb.getDouble()
+      a.max = bb.getDouble(); a.mean = bb.getDouble(); a.m2 = bb.getDouble()
+      buf.update(k, a)
+    }
+    buf
+  }
 
   /** Running (count, sum, min, max, mean, m2) of one slot's values. */
   final class Acc {

@@ -371,9 +371,10 @@ object Dedup {
     *
     * ADAPTIVE, with the same size gate as [[canonicalize]] and
     * `Derivation.transitiveDownstream` (`driverCap`, default
-    * [[graft.model.DriverCap]] pairs): ONE action fetches at most
-    * driverCap + 1 pairs, and under the cap the rounds run on the
-    * driver over those rows — verified near-dup pairs are
+    * [[graft.model.DriverCap]] pairs): ONE job over all partitions
+    * fetches the pairs while they number at most driverCap
+    * ([[graft.model.collectUnderCap]]), and under the cap the rounds run
+    * on the driver over those rows — verified near-dup pairs are
     * dup-cluster-sized at any corpus scale (256 at the bench, where the
     * distributed loop paid ~20 scheduled jobs). Past the cap the
     * distributed loop runs: the reused edge and degree frames are
@@ -386,44 +387,43 @@ object Dedup {
     val directed = valid.select(col("doc_a").as("u"), col("doc_b").as("v"))
       .unionByName(valid.select(col("doc_b").as("u"), col("doc_a").as("v")))
     val idType = directed.schema("u").dataType
-    val capInt = math.min(driverCap, Int.MaxValue - 1L).toInt
-    val probe = valid.select(col("doc_a").cast(idType), col("doc_b").cast(idType))
-      .limit(capInt + 1).collect()
-    if (probe.length <= capInt) {
-      val adj = scala.collection.mutable.LinkedHashMap.empty[Any,
-        scala.collection.mutable.Set[Any]]
-      probe.foreach { r =>
-        adj.getOrElseUpdate(r.get(0), scala.collection.mutable.Set.empty) += r.get(1)
-        adj.getOrElseUpdate(r.get(1), scala.collection.mutable.Set.empty) += r.get(0)
-      }
-      // the distributed loop's arithmetic: long overflow throws there
-      // under ANSI, so it throws here too
-      var pr = adj.map { case (u, _) => u -> 1000000L }
-      for (_ <- 1 to rounds) {
-        val c = adj.map { case (v, ns) => v -> math.floor(pr(v).toDouble / ns.size).toLong }
-        pr = adj.map { case (u, ns) =>
-          val sum = ns.foldLeft(0L)((acc, v) => Math.addExact(acc, c(v)))
-          u -> Math.addExact(150000L,
-            math.floor(Math.multiplyExact(sum, 17L).toDouble / 20).toLong)
+    graft.model.collectUnderCap(
+        valid.select(col("doc_a").cast(idType), col("doc_b").cast(idType)), driverCap) match {
+      case Some(probe) =>
+        val adj = scala.collection.mutable.LinkedHashMap.empty[Any,
+          scala.collection.mutable.Set[Any]]
+        probe.foreach { r =>
+          adj.getOrElseUpdate(r.get(0), scala.collection.mutable.Set.empty) += r.get(1)
+          adj.getOrElseUpdate(r.get(1), scala.collection.mutable.Set.empty) += r.get(0)
         }
-      }
-      pairs.sparkSession.createDataFrame(
-        pr.toSeq.map { case (u, p) => Row(u, p) }.asJava,
-        StructType(Seq(StructField("id", idType), StructField("pr", LongType, nullable = false))))
-    } else {
-      val edges = directed.distinct().localCheckpoint()
-      val deg = edges.groupBy(col("u").as("id")).agg(count(lit(1)).as("deg"))
-        .localCheckpoint()
-      var p = deg.select(col("id"), lit(1000000L).as("pr"))
-      for (_ <- 1 to rounds) {
-        val contrib = p.join(deg, Seq("id"))
-          .select(col("id").as("v"), floor(col("pr").cast("double") / col("deg")).cast("long").as("c"))
-        p = edges.join(contrib, Seq("v"))
-          .groupBy(col("u").as("id")).agg(sum("c").as("s"))
-          .select(col("id"),
-            (lit(150000L) + floor((col("s") * 17).cast("double") / 20).cast("long")).as("pr"))
-      }
-      p
+        // the distributed loop's arithmetic: long overflow throws there
+        // under ANSI, so it throws here too
+        var pr = adj.map { case (u, _) => u -> 1000000L }
+        for (_ <- 1 to rounds) {
+          val c = adj.map { case (v, ns) => v -> math.floor(pr(v).toDouble / ns.size).toLong }
+          pr = adj.map { case (u, ns) =>
+            val sum = ns.foldLeft(0L)((acc, v) => Math.addExact(acc, c(v)))
+            u -> Math.addExact(150000L,
+              math.floor(Math.multiplyExact(sum, 17L).toDouble / 20).toLong)
+          }
+        }
+        pairs.sparkSession.createDataFrame(
+          pr.toSeq.map { case (u, p) => Row(u, p) }.asJava,
+          StructType(Seq(StructField("id", idType), StructField("pr", LongType, nullable = false))))
+      case None =>
+        val edges = directed.distinct().localCheckpoint()
+        val deg = edges.groupBy(col("u").as("id")).agg(count(lit(1)).as("deg"))
+          .localCheckpoint()
+        var p = deg.select(col("id"), lit(1000000L).as("pr"))
+        for (_ <- 1 to rounds) {
+          val contrib = p.join(deg, Seq("id"))
+            .select(col("id").as("v"), floor(col("pr").cast("double") / col("deg")).cast("long").as("c"))
+          p = edges.join(contrib, Seq("v"))
+            .groupBy(col("u").as("id")).agg(sum("c").as("s"))
+            .select(col("id"),
+              (lit(150000L) + floor((col("s") * 17).cast("double") / 20).cast("long")).as("pr"))
+        }
+        p
     }
   }
 

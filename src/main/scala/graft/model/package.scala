@@ -1,6 +1,11 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.reflect.ClassTag
+
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+import org.apache.spark.sql.catalyst.expressions.{UnsafeProjection, UnsafeRow}
+import org.apache.spark.sql.execution.SQLExecution
 
 package object model {
   /** A registered engine query: (session, data dir) => result.
@@ -28,8 +33,60 @@ package object model {
     * when their edge set is small — `Dedup.canonicalize`,
     * `Dedup.pagerankInt` and `Derivation.transitiveDownstream`: up to
     * 1M edges (≈ 16 MB of (long, long)) are collected and walked
-    * locally; past it each runs its distributed loop. */
+    * locally; past it each runs its distributed loop. The zonal reducer
+    * has its own, smaller gate, `graft.ops.Zonal.DriverRows`. */
   val DriverCap: Long = 1L << 20
+
+  /** `df`'s rows when it has at most `cap` of them, else None. Inputs
+    * that are not skewed take one Spark job over all partitions, where a
+    * `limit(cap + 1).collect()` probe takes two (`executeTake` scans one
+    * partition first, then the rest). Each task ships at most its
+    * [[perPartition]] share of the cap, so the job fetches at most about
+    * 2 × cap rows however many partitions it has. Past the cap it
+    * returns None after that job. When one partition holds more than its
+    * share but the rows fetched leave room under the cap, an
+    * `executeTake` probe decides. */
+  def collectUnderCap(df: DataFrame, cap: Long): Option[Array[Row]] = {
+    val limit = math.min(math.max(cap, 0L), Int.MaxValue - 1L)
+    val schema = df.schema
+    // (the first `share` rows, whether the partition holds more)
+    val parts = perPartition(df, "collect", limit) { (share, rows) =>
+      val unsafe = UnsafeProjection.create(schema)
+      val kept = Array.newBuilder[UnsafeRow]
+      var n = 0L
+      while (n < share && rows.hasNext) { kept += unsafe(rows.next()).copy(); n += 1 }
+      (kept.result(), rows.hasNext)
+    }
+    // a partition that holds more than its share holds at least one more row
+    val atLeast = parts.map { case (rows, more) => rows.length + (if (more) 1L else 0L) }.sum
+    if (atLeast > limit) None
+    else if (parts.forall(!_._2)) {
+      val toRow = CatalystTypeConverters.createToScalaConverter(schema)
+      Some(parts.flatMap(_._1).map(r => toRow(r).asInstanceOf[Row]))
+    } else {
+      val probe = df.limit(limit.toInt + 1).collect()
+      if (probe.length <= limit) Some(probe) else None
+    }
+  }
+
+  /** Runs `task` once on each partition of `df`, in one Spark job tracked
+    * as one SQL execution named `name`, and returns the task results in
+    * partition order. `task` gets the partition's share of a driver
+    * budget of `cap` items, `min(cap, ceil(2 × cap / partitions))`, and
+    * must ship at most that many (or a marker). The job then fetches at
+    * most about 2 × cap items in total, where a share of `cap` per task
+    * could fetch partitions × cap and pass `spark.driver.maxResultSize`. */
+  private[graft] def perPartition[U: ClassTag](df: DataFrame, name: String, cap: Long)(
+      task: (Long, Iterator[InternalRow]) => U): Array[U] = {
+    val qe = df.queryExecution
+    SQLExecution.withNewExecutionId(qe, Some(name)) {
+      val rdd = qe.toRdd
+      val n = math.max(rdd.getNumPartitions, 1)
+      val c = math.min(math.max(cap, 0L), Long.MaxValue / 4)
+      val share = math.min(c, (2 * c + n - 1) / n)
+      rdd.mapPartitions(rows => Iterator.single(task(share, rows))).collect()
+    }
+  }
 
   /** Intra-query stage boundaries: `persist()` in place of the old
     * eager `localCheckpoint()` barriers. A multi-stage pipeline needs

@@ -365,8 +365,17 @@ object NetCdf {
     def offsetF(): Long = if (version == 1) bb.getInt.toLong else bb.getLong
     val numrecs = nonNeg()
     require(numrecs >= 0, "STREAMING numrecs not supported")
+    /** A header-declared count of `unit`-byte items, checked against the
+      * bytes left BEFORE anything is allocated or skipped for it: a
+      * flipped length byte would otherwise ask for up to 2 GiB, and the
+      * OutOfMemoryError escapes the quarantine's `catch Exception`. */
+    def sized(n: Long, unit: Int, what: String): Int = {
+      require(n >= 0 && n <= bb.remaining().toLong / unit,
+        s"corrupt header: $what $n overruns the ${bb.remaining()} bytes left")
+      n.toInt
+    }
     def name(): String = {
-      val len = nonNeg().toInt
+      val len = sized(nonNeg(), 1, "name length")
       val s = new Array[Byte](len); bb.get(s)
       bb.position(bb.position() + (4 - len % 4) % 4)
       new String(s)
@@ -378,7 +387,8 @@ object NetCdf {
       * absent in CDF-5, 8 in CDF-1/2). */
     def listCount(expected: Int): Int = {
       val tag = bb.getInt
-      val n = nonNeg().toInt
+      // every list entry takes at least a 4-byte name length
+      val n = sized(nonNeg(), 4, "list count")
       if (tag == 0) require(n == 0, s"ABSENT list with nonzero count $n")
       else require(tag == expected, s"bad list tag $tag (expected $expected or ABSENT)")
       n
@@ -413,7 +423,8 @@ object NetCdf {
       val strs = scala.collection.mutable.Map[String, String]()
       val nums = scala.collection.mutable.Map[String, Double]()
       for (_ <- 0 until nAtts) {
-        val an = name(); val at = bb.getInt; val ac = nonNeg().toInt
+        val an = name(); val at = bb.getInt
+        val ac = sized(nonNeg(), elemSize(at), s"attribute '$an' length")
         if (at == NC_CHAR) {
           val s = new Array[Byte](ac); bb.get(s)
           bb.position(bb.position() + (4 - ac % 4) % 4)
@@ -438,7 +449,7 @@ object NetCdf {
     val nVars = listCount(NC_VARIABLE)
     val metas = (0 until nVars).map { _ =>
       val vn = name()
-      val nd = nonNeg().toInt
+      val nd = sized(nonNeg(), 4, s"variable '$vn' dimension count")
       val vdims = (0 until nd).map(_ => dims(nonNeg().toInt)._1)
       val (fill, strAttrs, numAttrs) = attrList()
       val typ = bb.getInt
@@ -482,16 +493,19 @@ object NetCdf {
         s"variable '$vn' data [$begin, +$span) outside the file " +
           s"(${bytes.length} bytes; offsets beyond 2 GiB need a chunked reader)")
       val shape = vdims.map(d => { val sz = sizeOf(d); if (sz == 0) nRecs else sz })
-      val nElL = shape.map(_.toLong).product
-      // validate the Long product BEFORE narrowing: a corrupt header
-      // whose dim product wraps past Int.MaxValue must dead-letter, not
-      // sneak a small wrapped count past the vsize bound below
-      require(nElL >= 0 && nElL <= Int.MaxValue / es,
+      // dim sizes are positive ints (the record dim, first, may be 0), so
+      // the product saturates past Int.MaxValue instead of wrapping
+      def product(ds: Seq[Int]) = ds.foldLeft(1L)((a, d) => if (a > Int.MaxValue) a else a * d)
+      val nElL = product(shape)
+      // validate the Long product BEFORE narrowing and allocating: the
+      // data of a classic file is stored uncompressed, so it must fit the
+      // file; a corrupt header must dead-letter, not allocate for it
+      require(nElL >= 0 && nElL <= bytes.length / es,
         s"variable '$vn': implausible element count $nElL (corrupt dims?)")
       val nEl = nElL.toInt
       // elements that must fit one contiguous slab: a whole record for
       // record variables, the whole variable otherwise
-      val perSlab = if (isRec) shape.drop(1).map(_.toLong).product.toInt else nEl
+      val perSlab = if (isRec) math.min(product(shape.drop(1)), Int.MaxValue.toLong).toInt else nEl
       require(perSlab.toLong * es <= (if (isRec) vsize else vsize),
         s"variable '$vn': $perSlab elements of $es bytes exceed vsize $vsize")
       // CF packing (the ERA5-style layout): values = raw·scale + offset

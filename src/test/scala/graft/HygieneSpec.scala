@@ -85,4 +85,22 @@ class HygieneSpec extends AnyFunSuite {
       s"new graft.* conf keys ${(keys -- allowed).mkString(", ")}: a settled switch " +
         "collapses to its winner")
   }
+
+  test("no limit(n + 1).collect() size probe outside model.collectUnderCap") {
+    val probe = "\\.limit\\([^()]*\\+\\s*1\\)\\s*\\.collect\\(\\)".r
+    // collectUnderCap's own skew fallback is the one allowed probe
+    val offenders = mainSources("src/main").collect {
+      case (p, src) if probe.findAllIn(src).size > (if (p.endsWith("model/package.scala")) 1 else 0) =>
+        p.getFileName.toString }
+    assert(offenders.isEmpty,
+      s"size probes in ${offenders.mkString(", ")}: executeTake scans one partition, then " +
+        "the rest (two jobs); gate with graft.model.collectUnderCap")
+  }
+
+  test("SlotStats.slotStats( is called only from Zonal: one zonal reducer") {
+    val callers = mainSources("src/main").collect {
+      case (p, src) if src.contains("SlotStats.slotStats(") => p.getFileName.toString }
+    assert(callers.toSet.subsetOf(Set("Zonal.scala")),
+      s"SlotStats.slotStats( in ${callers.mkString(", ")}: reduce through graft.ops.Zonal")
+  }
 }

@@ -8,7 +8,8 @@ import org.apache.spark.sql.functions._
 /** Point and area series equal a plain-Scala series over the same
   * pixels, row for row and in time order, including NULL (NaN) pixels
   * and timesteps; and a served request costs a bounded number of jobs
-  * (the store open runs none, and the ordering runs no sampling job). */
+  * (the store open runs none, and the ordering runs no sampling job).
+  * The area series is checked on the driver and distributed paths. */
 class TimeseriesSpec extends SparkSpec {
   import spark.implicits._
 
@@ -71,9 +72,13 @@ class TimeseriesSpec extends SparkSpec {
   test("area series equals the brute-force masked reduce for every how") {
     val masked = cells.filter { case (_, x, y, _) => inside(x + 0.5, gh - y - 0.5) }
     assert(masked.nonEmpty && masked.size < cells.size)
-    for (how <- Seq("mean", "sum", "min", "max", "std")) {
-      val got = Timeseries.area(pixels, wkt, (0.0, 0.0, gw.toDouble, gh.toDouble), how)
-        .collect().map(r => (day(r), opt(r, 1), r.getLong(2))).toSeq
+    // driverCap = 0 forces the distributed aggregate
+    for (how <- Seq("mean", "sum", "min", "max", "std"); cap <- Seq(graft.ops.Zonal.DriverRows, 0L)) {
+      val df = Timeseries.area(pixels, wkt, (0.0, 0.0, gw.toDouble, gh.toDouble), how, cap)
+      // the driver path's rows are in hand: collecting them runs no job
+      val (rows, jobs) = jobsDuring(df.collect())
+      assert((jobs == 0) == (cap > 0), s"how=$how cap=$cap: collect ran $jobs jobs")
+      val got = rows.map(r => (day(r), opt(r, 1), r.getLong(2))).toSeq
       val want = masked.groupBy(_._1).toSeq.sortBy(_._1).map { case (d, rows) =>
         val vs = rows.flatMap(_._4)
         val n = vs.size.toDouble
@@ -84,21 +89,39 @@ class TimeseriesSpec extends SparkSpec {
           case "std" => math.sqrt(vs.map(v => (v - mean) * (v - mean)).sum / n)
         }), vs.size.toLong)
       }
-      assert(got.map(g => (g._1, g._3)) == want.map(w => (w._1, w._3)), s"how=$how")
+      assert(got.map(g => (g._1, g._3)) == want.map(w => (w._1, w._3)), s"how=$how cap=$cap")
       got.zip(want).foreach { case ((d, a, _), (_, b, _)) =>
         assert(a.isDefined == b.isDefined && a.zip(b).forall { case (p, q) =>
-          math.abs(p - q) <= 1e-9 * math.max(1.0, math.abs(q)) }, s"how=$how $d: $a vs $b")
+          math.abs(p - q) <= 1e-9 * math.max(1.0, math.abs(q)) }, s"how=$how cap=$cap $d: $a vs $b")
       }
     }
+  }
+
+  test("an integral v sums exactly while partial sums stay within 2^53") {
+    // the reducer sums in double: integers up to 2^53 are exact doubles
+    val t = java.sql.Timestamp.valueOf("2024-01-01 00:00:00")
+    val big = (1L << 52) + 1
+    def px(vs: Seq[Long]) = vs.zipWithIndex.map { case (v, i) => (t, 0, i, v, i + 0.5, 0.5) }
+      .toDF("t", "y", "x", "v", "lon", "lat")
+    val box = "POLYGON((0 0, 4 0, 4 1, 0 1, 0 0))"
+    for (cap <- Seq(graft.ops.Zonal.DriverRows, 0L)) {
+      val s = Timeseries.area(px(Seq(big, (1L << 51) + 3, -7L)), box, (0.0, 0.0, 4.0, 1.0), "sum", cap)
+      assert(s.schema("value").dataType == org.apache.spark.sql.types.LongType)
+      assert(s.collect().map(_.getLong(1)).toSeq == Seq(big + (1L << 51) + 3 - 7), s"cap=$cap")
+    }
+    // past 2^53 the sum rounds to the nearest double
+    val past = Timeseries.area(px(Seq(1L << 53, 1L)), box, (0.0, 0.0, 4.0, 1.0), "sum")
+    assert(past.collect().map(_.getLong(1)).toSeq == Seq(1L << 53))
   }
 
   test("served requests run a bounded number of jobs") {
     point(0, 0).collect() // warm codegen and the store listing
     val (_, pointJobs) = jobsDuring(point(3, 2).collect())
     assert(pointJobs <= 2, s"point series ran $pointJobs jobs")
+    // the area job runs inside the call: count the whole call
     val (_, areaJobs) = jobsDuring(Timeseries.area(pixels, wkt,
       (0.0, 0.0, gw.toDouble, gh.toDouble), "mean").collect())
-    assert(areaJobs <= 2, s"area series ran $areaJobs jobs")
+    assert(areaJobs == 1, s"area series ran $areaJobs jobs")
     val (_, ovJobs) = jobsDuring(OverviewServe.readBbox(spark, base, Seq(1),
       1.0, 1.0, days.head, days.last, 0, 3, 0, 3).collect())
     assert(ovJobs == 1, s"overview read ran $ovJobs jobs")

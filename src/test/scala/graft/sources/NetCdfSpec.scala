@@ -351,4 +351,22 @@ class NetCdfSpec extends SparkSpec {
     assert(e.getMessage.contains("only be first"))
   }
 
+  test("a 0x7FFFFFF0 header name length fails as a named exception and quarantines") {
+    // CDF-1: magic, numrecs, NC_DIMENSION tag, dim count, then the first
+    // dimension's name length at byte 16
+    val bad = sampleFile
+    val bb = java.nio.ByteBuffer.wrap(bad)
+    assert(bb.getInt(8) == 0x0A && bb.getInt(16) == "time".length)
+    bb.putInt(16, 0x7FFFFFF0)
+    val e = intercept[IllegalArgumentException](NetCdf.read(bad))
+    assert(e.getMessage.contains("name length 2147483632"), e.getMessage)
+    val dir = java.nio.file.Files.createTempDirectory("graft-nc-quarantine-")
+    java.nio.file.Files.write(dir.resolve("precip_20240101.nc"), sampleFile)
+    java.nio.file.Files.write(dir.resolve("precip_20240102.nc"), bad)
+    val (pixels, dead) = Formats.ingestDirQuarantine(spark, dir.toString)
+    assert(pixels.count() > 0)
+    val dl = dead.collect()
+    assert(dl.map(_.getString(0)).toSeq == Seq("precip_20240102.nc"))
+    assert(dl(0).getString(1).startsWith("IllegalArgumentException"), dl(0).getString(1))
+  }
 }
