@@ -4,12 +4,12 @@ import org.apache.hadoop.fs.Path
 import org.apache.parquet.format.converter.ParquetMetadataConverter
 import org.apache.parquet.hadoop.Footer
 import org.apache.parquet.hadoop.util.HadoopInputFile
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.execution.datasources.InMemoryFileIndex
+import org.apache.spark.sql.{DataFrame, GraftShim, SparkSession}
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, InMemoryFileIndex}
 import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat,
   ParquetFooterReader, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
+import org.apache.spark.sql.types.{LongType, StructType, TimestampNTZType, TimestampType}
 
 /** Loaders for the driver-provided parquet tables (TESTDATA.md).
   *
@@ -58,23 +58,28 @@ object Tables {
       _ => open(spark, s"$dir/$name.parquet").cache())
 
   /** Opens a parquet dataset (a file, or a directory of part files with
-    * optional partition subdirectories) without running a Spark job.
+    * optional partition subdirectories) without running a Spark job,
+    * listing the path once.
     *
     * `spark.read.parquet(path)` infers the schema through
     * `SchemaMergeUtils.mergeSchemasInParallel`, which launches a one-task
     * job even with schema merging off, to read the one footer that
-    * inference touches. This reads that same footer on the driver and
-    * hands Spark the result as the data schema. The footer is the one
-    * Spark's own inference picks with `mergeSchema` off: `_common_metadata`,
-    * else `_metadata`, else the first data file by path, from the same
-    * file index (so the same hidden-name filter). Partition columns are
-    * still discovered from directory names by the read itself.
+    * inference touches. This reads that same footer on the driver. The
+    * footer is the one Spark's own inference picks with `mergeSchema`
+    * off: `_common_metadata`, else `_metadata`, else the first data file
+    * by path, from the same kind of file index (so the same hidden-name
+    * filter). The relation is then built on that index, as Spark's
+    * `DataSource` builds it: partition columns come from the index's
+    * directory names, and the data schema is the footer's, minus the
+    * partition columns, made nullable. Handing the schema to
+    * `spark.read.schema(..).parquet(path)` instead would build a second
+    * index and list the whole path again.
     *
-    * Every call lists the path and reads one footer: nothing is cached,
-    * so a rewritten dataset is seen on the next open. Schema merging
-    * needs every footer and is refused rather than silently skipped.
-    * A path with nothing to read (missing, or no parquet files) goes to
-    * `spark.read.parquet` so it fails with Spark's own error. */
+    * Every call lists the path once and reads one footer: nothing is
+    * cached, so a rewritten dataset is seen on the next open. Schema
+    * merging needs every footer and is refused rather than silently
+    * skipped. A path with nothing to read (missing, or no parquet files)
+    * goes to `spark.read.parquet` so it fails with Spark's own error. */
   def open(spark: SparkSession, path: String): DataFrame =
     openIfPresent(spark, path).getOrElse(spark.read.parquet(path))
 
@@ -90,8 +95,8 @@ object Tables {
     val root = new Path(path)
     val fs = root.getFileSystem(hadoopConf)
     if (!fs.exists(root)) return None
-    val files = new InMemoryFileIndex(spark, Seq(fs.makeQualified(root)), Map.empty, None)
-      .allFiles().sortBy(_.getPath.toString)
+    val index = new InMemoryFileIndex(spark, Seq(fs.makeQualified(root)), Map.empty, None)
+    val files = index.allFiles().sortBy(_.getPath.toString)
     val summaries = Seq("_common_metadata", "_metadata") // in preference order
     summaries.flatMap(n => files.find(_.getPath.getName == n)).headOption
       .orElse(files.find(f => !summaries.contains(f.getPath.getName)))
@@ -101,7 +106,10 @@ object Tables {
           ParquetMetadataConverter.SKIP_ROW_GROUPS)
         val schema = ParquetFileFormat.readSchemaFromFooter(
           new Footer(f.getPath, footer), new ParquetToSparkSchemaConverter(conf))
-        spark.read.schema(schema).parquet(path)
+        val partitions = index.partitionSchema
+        val data = StructType(schema.filterNot(c => partitions.exists(p => conf.resolver(p.name, c.name))))
+        spark.baseRelationToDataFrame(HadoopFsRelation(index, partitions,
+          GraftShim.asNullable(data), None, new ParquetFileFormat, Map("path" -> path))(spark))
       }
   }
 

@@ -15,6 +15,10 @@ object GraftShim {
     case _ => None
   }
 
+  /** `s` with every field, element and value nullable, as a file
+    * source's data schema is. */
+  def asNullable(s: types.StructType): types.StructType = s.asNullable
+
   /** Build a DataFrame from a (possibly custom) logical plan. */
   def ofRows(spark: SparkSession,
       plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): DataFrame =

@@ -63,6 +63,23 @@ class EdgeSpec extends SparkSpec {
     ts.collect()
   }
 
+  test("point timeseries rejects a NaN coordinate, a pixel size <= 0 and an empty grid") {
+    val px = Grid.fromLineitem(spark, sf0001)
+    def at(lat: Double = 0.0, lon: Double = 0.0, pw: Double = Grid.PX, ph: Double = Grid.PY,
+           gridW: Int = Grid.W, gridH: Int = Grid.H) =
+      Timeseries.point(px, lat, lon, west = -180.0, north = 90.0, pw, ph, gridW, gridH)
+    val bad = Seq[(String, () => Any)](
+      "NaN lat" -> (() => at(lat = Double.NaN)), "NaN lon" -> (() => at(lon = Double.NaN)),
+      "pw 0" -> (() => at(pw = 0.0)), "ph -1" -> (() => at(ph = -1.0)),
+      "NaN pw" -> (() => at(pw = Double.NaN)),
+      "gridW 0" -> (() => at(gridW = 0)), "gridH -2" -> (() => at(gridH = -2)))
+    for ((name, call) <- bad) {
+      // rejected before any scan: a NaN used to clamp to pixel (0, 0)
+      val (_, jobs) = jobsDuring(intercept[IllegalArgumentException](call()))
+      assert(jobs == 0, s"$name ran $jobs jobs")
+    }
+  }
+
   test("degenerate documents: shingles of short texts are empty, not errors") {
     val docs = Seq((1L, ""), (2L, "one two"), (3L, "a b c")).toDF("doc_id", "text")
     val sh = Dedup.shingles(docs, "doc_id", "text", 3)

@@ -97,6 +97,15 @@ class HygieneSpec extends AnyFunSuite {
         "the rest (two jobs); gate with graft.model.collectUnderCap")
   }
 
+  test("parquet is opened only in Tables.scala: one open path") {
+    val offenders = mainSources("src/main").collect {
+      case (p, src) if p.getFileName.toString != "Tables.scala" &&
+          (src.contains(".read.parquet(") || src.contains(".read.schema(")) => p.getFileName.toString }
+    assert(offenders.isEmpty,
+      s"parquet read in ${offenders.mkString(", ")}: open it with graft.Tables.open, which " +
+        "runs no job and lists the path once")
+  }
+
   test("SlotStats.slotStats( is called only from Zonal: one zonal reducer") {
     val callers = mainSources("src/main").collect {
       case (p, src) if src.contains("SlotStats.slotStats(") => p.getFileName.toString }

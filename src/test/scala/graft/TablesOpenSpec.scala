@@ -6,6 +6,7 @@ import graft.streaming.{IngestStream, StreamCuration}
 import org.apache.spark.sql.AnalysisException
 import org.apache.spark.sql.functions._
 import java.nio.file.Files
+import scala.jdk.CollectionConverters._
 
 /** [[Tables.open]] must give exactly the schema Spark's own inference
   * gives, for every dataset shape the engine opens, without running a
@@ -68,6 +69,35 @@ class TablesOpenSpec extends SparkSpec {
     assert(Tables.open(spark, base).count() == cube.count())
   }
 
+  test("an open lists each directory of a partitioned store once") {
+    val base = tmp("listing") + "/cube"
+    GridStore.writeZOrdered((for (d <- 1 to 3; ty <- 0 until 4; tx <- 0 until 4)
+      yield ("c", f"2024-01-$d%02d 00:00:00", ty, tx, (d * ty + tx).toDouble))
+      .toDF("collection", "ts", "tile_y", "tile_x", "v")
+      .withColumn("t", to_timestamp(col("ts"))).drop("ts"), base)
+    // the directories a file index lists: the root and every partition
+    // directory under it (hidden ones are skipped)
+    val dirs = {
+      val out = scala.collection.mutable.Buffer[String]()
+      def walk(d: java.io.File): Unit = {
+        out += d.getPath
+        d.listFiles().filter(f => f.isDirectory && !f.getName.startsWith("_") &&
+          !f.getName.startsWith(".")).foreach(walk)
+      }
+      walk(new java.io.File(base))
+      out.toSet
+    }
+    assert(dirs.exists(_.contains("p_date=")), s"no partition directories under $base")
+    spark.sparkContext.hadoopConfiguration.set("fs.countfs.impl", classOf[CountingFileSystem].getName)
+    CountingFileSystem.listed.clear()
+    val df = Tables.open(spark, s"countfs://$base")
+    val listed = CountingFileSystem.listed.asScala.map { case (k, n) => k -> n.intValue }.toMap
+    assert(listed == dirs.map(_ -> 1).toMap,
+      s"listStatus calls per path (want each of ${dirs.size} directories once): $listed")
+    assert(df.schema == Tables.open(spark, base).schema)
+    assert(df.count() == 48L)
+  }
+
   test("an ingest-stream partitioned target opens with the inferred schema") {
     val dz = tmp("dropzone"); val tgt = tmp("target")
     val staging = tmp("staging")
@@ -128,4 +158,18 @@ class TablesOpenSpec extends SparkSpec {
       assert(e.getMessage.contains("mergeSchema"))
     } finally spark.conf.unset("spark.sql.parquet.mergeSchema")
   }
+}
+
+/** The local file system under the `countfs` scheme, counting
+  * `listStatus` calls per path. */
+class CountingFileSystem extends org.apache.hadoop.fs.RawLocalFileSystem {
+  override def getUri: java.net.URI = java.net.URI.create("countfs:///")
+  override def listStatus(f: org.apache.hadoop.fs.Path): Array[org.apache.hadoop.fs.FileStatus] = {
+    CountingFileSystem.listed.merge(f.toUri.getPath, 1, (a: Integer, b: Integer) => a + b)
+    super.listStatus(f)
+  }
+}
+
+object CountingFileSystem {
+  val listed = new java.util.concurrent.ConcurrentHashMap[String, Integer]()
 }

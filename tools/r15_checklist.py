@@ -1,8 +1,14 @@
 #!/usr/bin/env python3
 """Generate the OPTIMIZATION_r15.md operator-checklist table from the
-committed round record (BENCH_LOCAL.json) + the EXECUTED-plan audit
+committed round record (BENCH_LOCAL.json) + the plan sweep
 (plans/r15/plan_sweep_final.tsv). Regenerable evidence: every number in
 the emitted table is derivable from those two committed files.
+
+The sweep's operator counts are INITIAL AQE plans (isFinalPlan=false):
+the sweep explained each frame's own QueryExecution, which its noop
+write never executes. The final-plan record is
+plans/r16/lab_plans_final.tsv (graft.Lab --plans); the two differ on 36
+of 166 rows.
 
 Usage: tools/r15_checklist.py [BENCH_LOCAL.json] [plan_sweep_final.tsv]
 """
