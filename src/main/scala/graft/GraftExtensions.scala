@@ -4,14 +4,19 @@ import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
-import graft.functions.{Haversine, QDotProduct, SpanHashWindows, SpanHashWindowsLong, TileStatsPartial}
+import graft.functions.{FixedDateFormatRule, Haversine, QDotProduct, SpanHashWindows,
+  SpanHashWindowsLong, TileStatsPartial}
 
-/** The one wiring path for the engine's native expressions and the
-  * as-of planner strategy: `Sessions.build` applies it through
-  * `builder.withExtensions`, and a spark-submit / Thrift-server
-  * deployment sets `--conf spark.sql.extensions=graft.GraftExtensions`.
-  * Either way `haversine_km`, `tile_stats_partial`, `span_hash_windows`
-  * and `q_dot` are callable from SQL on every session.
+/** The one wiring path for the engine's native expressions, the as-of
+  * planner strategy and the `date_format` kernel rule: `Sessions.build`
+  * applies it through `builder.withExtensions`, and a spark-submit /
+  * Thrift-server deployment sets
+  * `--conf spark.sql.extensions=graft.GraftExtensions`. Either way
+  * `haversine_km`, `tile_stats_partial`, `span_hash_windows` and `q_dot`
+  * are callable from SQL on every session, and the optimizer runs
+  * [[graft.functions.FixedDateFormatRule]], which puts a fixed-field
+  * kernel in place of `date_format` (exclude it by its class name in
+  * `spark.sql.optimizer.excludedRules`).
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   import GraftExtensions._
@@ -26,6 +31,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
         builder))
     }
     ext.injectPlannerStrategy(_ => graft.plans.AsofJoinStrategy)
+    ext.injectOptimizerRule(_ => FixedDateFormatRule)
   }
 }
 

@@ -3,6 +3,7 @@ package graft.ops
 import scala.collection.mutable
 
 import graft.functions.SlotStats
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{Column, DataFrame, GraftShim, Row}
 import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
 import org.apache.spark.sql.catalyst.expressions.{BoundReference, Cast, JoinedRow, Literal,
@@ -20,13 +21,14 @@ import org.apache.spark.sql.types._
   *  1. the boundary frame is collected (a local frame collects
   *     without a job) into a [[ZonalIndex]]: one slot per
   *     boundary, a closed envelope and a lazily parsed prepared geometry;
-  *  2. each pixel gets the slots whose geometry covers its centre,
-  *     boundary-inclusive — a per-pixel index lookup, not a join;
-  *  3. each task of the scan job folds its pixels into a partial
+  *  2. the index is broadcast once, and each task of the scan job folds
+  *     every pixel into the slots whose geometry covers its centre,
+  *     boundary-inclusive ([[ZonalIndex.foreachSlot]] inside the task's
+  *     loop: no UDF, no per-row slot array, no join), building a partial
   *     timestep → slot → [[SlotStats.Acc]] map (every timestep it saw
-  *     gets an entry, even one that reached no slot), and the driver
-  *     merges the partials in partition order, so the doubles repeat bit
-  *     for bit from run to run;
+  *     gets an entry, even one that reached no slot);
+  *  3. the driver merges the partials in partition order, so the doubles
+  *     repeat bit for bit from run to run;
   *  4. the driver emits every (boundary, timestep) row of the timesteps
   *     present, all NULL where the boundary covers no pixel (the
   *     reference's outer-join-like contract), as a local frame ordered
@@ -40,10 +42,10 @@ import org.apache.spark.sql.types._
   * marker arrives or the merged map passes the cap, the driver drops
   * what it holds and returns the distributed path: one [[SlotStats]]
   * aggregate grouped by `t` (map-side partials, one exchange keyed by
-  * `t`) whose per-`t` slot array is exploded, keys attached from a
-  * literal array. The scan job is then wasted, though each task stops
-  * reading at its marker. More boundaries than the cap go there
-  * directly, without the scan job.
+  * `t`) over the slot array of [[ZonalIndex.slotsOf]], whose per-`t`
+  * result is exploded, keys attached from a literal array. The scan job
+  * is then wasted, though each task stops reading at its marker. More
+  * boundaries than the cap go there directly, without the scan job.
   *
   * The call is eager: the scan job runs when `zonalStats` is called, not
   * when its result is collected.
@@ -100,11 +102,11 @@ object Zonal {
     val tField = pixels.schema("t")
     val vType = pixels.schema("v").dataType
     val sumType = pixels.select(sum(col("v"))).schema.head.dataType
-    val slots = index.slotsOf(col("lon"), col("lat"))
     val v = col("v").cast("double")
     val onDriver =
       if (driverCap > 0 && index.size <= driverCap)
-        merged(pixels.select(col("t"), slots, v), index.size, driverCap)
+        merged(pixels.select(col("t"), col("lon").cast("double"), col("lat").cast("double"), v),
+          index, driverCap)
       else None
     onDriver match {
       case Some(byT) =>
@@ -130,6 +132,7 @@ object Zonal {
         GraftShim.ofRows(pixels.sparkSession,
           LocalRelation(DataTypeUtils.toAttributes(schema), out))
       case None =>
+        val slots = index.slotsOf(col("lon"), col("lat"))
         val keyArray = GraftShim.column(Literal.create(keys, ArrayType(keySchema)))
         pixels
           .groupBy("t")
@@ -145,13 +148,18 @@ object Zonal {
 
   private type Partial = mutable.LongMap[SlotStats.Acc]
 
-  /** Runs `scan` (t, slots, v as double) as one job and merges the task
-    * partials on the driver, in partition order: t (a one-field row) →
-    * slot → accumulator. None once a task's timesteps × `nSlots` pass
-    * its share of `cap`, or the merged ones pass `cap`. */
-  private def merged(scan: DataFrame, nSlots: Int, cap: Long): Option[mutable.HashMap[UnsafeRow, Partial]] = {
+  /** Runs `scan` (t, lon, lat, v, all but t as double) as one job that
+    * broadcasts `index` once, destroyed when the job ends, and merges
+    * the task partials on the driver, in partition order: t (a
+    * one-field row) → slot → accumulator. None once a task's timesteps × slots pass its share of
+    * `cap`, or the merged ones pass `cap`. */
+  private def merged(scan: DataFrame, index: ZonalIndex,
+                     cap: Long): Option[mutable.HashMap[UnsafeRow, Partial]] = {
     val tType = scan.schema.head.dataType
-    val parts = graft.model.perPartition(scan, "zonal", cap)(partial(tType, nSlots))
+    val bc = scan.sparkSession.sparkContext.broadcast(index)
+    val parts =
+      try graft.model.perPartition(scan, "zonal", cap)(partial(tType, bc))
+      finally bc.destroy()
     if (parts.exists(_.isEmpty)) None
     else {
       val byT = mutable.HashMap.empty[UnsafeRow, Partial]
@@ -162,42 +170,53 @@ object Zonal {
           case None => byT.update(t, accs)
         }
       }
-      if (byT.size.toLong * nSlots > cap) None else Some(byT)
+      if (byT.size.toLong * index.size > cap) None else Some(byT)
+    }
+  }
+
+  /** Adds one pixel's value to each slot it is called with, in the
+    * current timestep's accumulators: the task loop's slot visitor, one
+    * per task, so a pixel allocates nothing. */
+  private final class Fold extends (Int => Unit) {
+    var accs: Partial = _
+    var hasV = false
+    var v = 0.0
+    def apply(slot: Int): Unit = {
+      val acc = accs.getOrElseUpdate(slot.toLong, new SlotStats.Acc)
+      if (hasV) acc.add(v)
     }
   }
 
   /** One task's partial, each timestep's accumulators encoded as
     * [[SlotStats.encode]] does; None (the marker) once its timesteps ×
-    * `nSlots` pass `share`. Rows of one timestep mostly come together, so
-    * the timestep key is copied only when it changes. */
-  private def partial(tType: DataType, nSlots: Int)(share: Long,
+    * slots pass `share`. Each pixel is folded into the slots covering
+    * its centre by [[ZonalIndex.foreachSlot]], inside this loop. Rows of
+    * one timestep mostly come together, so `t`'s projection is compared
+    * with the last one and copied only when it changes. */
+  private def partial(tType: DataType, index: Broadcast[ZonalIndex])(share: Long,
       rows: Iterator[InternalRow]): Option[Array[(UnsafeRow, Array[Byte])]] = {
+    val idx = index.value
+    val nSlots = idx.size
     val tOf = UnsafeProjection.create(Seq(BoundReference(0, tType, nullable = true)))
     val byT = mutable.LinkedHashMap.empty[UnsafeRow, Partial]
+    val fold = new Fold
     var lastT: UnsafeRow = null
-    var accs: Partial = null
     while (rows.hasNext) {
       val r = rows.next()
       val t = tOf(r)
-      if (t != lastT) {
+      if (lastT == null || t != lastT) {
         lastT = t.copy()
-        accs = byT.getOrElse(lastT, null)
-        if (accs == null) {
+        fold.accs = byT.getOrElse(lastT, null)
+        if (fold.accs == null) {
           if ((byT.size + 1L) * nSlots > share) return None
-          accs = mutable.LongMap.empty
-          byT.update(lastT, accs)
+          fold.accs = mutable.LongMap.empty
+          byT.update(lastT, fold.accs)
         }
       }
-      val s = r.getArray(1)
-      if (s != null) {
-        val hasV = !r.isNullAt(2)
-        val x = if (hasV) r.getDouble(2) else 0.0
-        var i = 0
-        while (i < s.numElements()) {
-          val acc = accs.getOrElseUpdate(s.getInt(i).toLong, new SlotStats.Acc)
-          if (hasV) acc.add(x)
-          i += 1
-        }
+      if (!r.isNullAt(1) && !r.isNullAt(2)) {
+        fold.hasV = !r.isNullAt(3)
+        fold.v = if (fold.hasV) r.getDouble(3) else 0.0
+        idx.foreachSlot(r.getDouble(1), r.getDouble(2))(fold)
       }
     }
     Some(byT.iterator.map { case (t, m) => (t, SlotStats.encode(m)) }.toArray)

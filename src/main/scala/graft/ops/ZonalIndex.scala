@@ -21,11 +21,15 @@ import org.locationtech.jts.io.WKTReader
   *
   * Candidates come from a uniform bucket grid over the union of the
   * envelopes, built before any task runs (CSR arrays: `cellStart`
-  * offsets into `cellSlots`), so a lookup tests only the slots whose
-  * envelope shares the point's cell, not every boundary. Geometries are parsed into JTS
-  * prepared geometries lazily, per slot, the first time a point falls
-  * inside that slot's envelope; [[slotsOf]] broadcasts the index, so an
-  * executor parses each geometry once, not once per task.
+  * offsets into `cellSlots`, each cell's slots ascending), so a lookup
+  * tests only the slots whose envelope shares the point's cell, not every
+  * boundary. [[foreachSlot]] is that lookup: it allocates no array, so
+  * the zonal reducer calls it inside its task loop, once per pixel;
+  * [[slots]] and the [[slotsOf]] column collect its visits. Geometries
+  * are parsed into JTS prepared geometries lazily, per slot, the first
+  * time a point falls inside that slot's envelope; the index is
+  * broadcast (by the reducer, or by [[slotsOf]]), so an executor parses
+  * each geometry once, not once per task.
   */
 final class ZonalIndex private (
     wkts: Array[String],
@@ -60,23 +64,24 @@ final class ZonalIndex private (
         catch { case _: Exception => false }
       }
 
-  /** Index range in `cellSlots` of the point's cell; empty off the grid. */
-  private def cellRange(x: Double, y: Double): (Int, Int) =
-    if (!(x >= x0 && x <= x1 && y >= y0 && y <= y1)) (0, 0)
-    else {
+  /** Calls `f` with each slot covering (x, y), in ascending order. Off
+    * the grid (NaN included) it calls nothing. */
+  def foreachSlot(x: Double, y: Double)(f: Int => Unit): Unit =
+    if (x >= x0 && x <= x1 && y >= y0 && y <= y1) {
       val c = ZonalIndex.cell(y, y0, y1, ny) * nx + ZonalIndex.cell(x, x0, x1, nx)
-      (cellStart(c), cellStart(c + 1))
+      var i = cellStart(c)
+      val until = cellStart(c + 1)
+      while (i < until) {
+        val slot = cellSlots(i)
+        if (coversAt(slot, x, y)) f(slot)
+        i += 1
+      }
     }
 
   /** Slots covering (x, y), ascending. */
   def slots(x: Double, y: Double): Array[Int] = {
-    val (from, until) = cellRange(x, y)
     val out = Array.newBuilder[Int]
-    var i = from
-    while (i < until) {
-      if (coversAt(cellSlots(i), x, y)) out += cellSlots(i)
-      i += 1
-    }
+    foreachSlot(x, y)(out += _)
     out.result()
   }
 

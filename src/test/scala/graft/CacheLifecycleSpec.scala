@@ -15,15 +15,23 @@ class CacheLifecycleSpec extends SparkSpec {
 
   private def persistedRddCount = spark.sparkContext.getPersistentRDDs.size
 
+  /** Ids of the persisted RDDs. RDDs left by earlier specs, which the
+    * async ContextCleaner may drop at any time, change a count of them
+    * by as much as a query does, so the cases check ids instead. */
+  private def persistedRddIds = spark.sparkContext.getPersistentRDDs.keySet.toSet
+
   test("evictCaches releases the module frames; queries rebuild after") {
     SparkEntry.clearCaches()
-    val before = persistedRddCount
+    val before = persistedRddIds
     // populate the dedup module's shared shingle + verified-pair caches
     val n1 = SparkEntry.queries("d_minhash_lsh")(spark, sf0001).count()
-    assert(persistedRddCount > before, "expected cached frames after d_minhash_lsh")
+    val cached = persistedRddIds -- before
+    assert(cached.nonEmpty, "expected cached frames after d_minhash_lsh")
     SparkEntry.evictCaches(sf0001)
-    assert(persistedRddCount <= before,
-      s"eviction left storage blocks: $persistedRddCount > $before")
+    // nothing persisted since `before` survives: neither the query's
+    // frames nor any the eviction itself persisted
+    val left = persistedRddIds -- before
+    assert(left.isEmpty, s"eviction left storage blocks: RDDs ${left.mkString(", ")}")
     // queries still work — the cache rebuilds transparently
     assert(SparkEntry.queries("d_minhash_lsh")(spark, sf0001).count() == n1)
     SparkEntry.clearCaches()
@@ -31,13 +39,14 @@ class CacheLifecycleSpec extends SparkSpec {
 
   test("clearCaches releases everything across modules") {
     SparkEntry.clearCaches()
-    val before = persistedRddCount
+    val before = persistedRddIds
     SparkEntry.queries("d_minhash_lsh")(spark, sf0001).count()
     SparkEntry.queries("s_ann_lsh")(spark, sf0001).count()
-    assert(persistedRddCount > before)
+    val cached = persistedRddIds -- before
+    assert(cached.nonEmpty, "expected cached frames after d_minhash_lsh and s_ann_lsh")
     SparkEntry.clearCaches()
-    assert(persistedRddCount <= before,
-      s"clearCaches left storage blocks: $persistedRddCount > $before")
+    val left = persistedRddIds -- before
+    assert(left.isEmpty, s"clearCaches left storage blocks: RDDs ${left.mkString(", ")}")
   }
 
   test("production containment rides the capped index, not the all-pairs baseline") {

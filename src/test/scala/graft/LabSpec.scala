@@ -39,6 +39,35 @@ class LabSpec extends SparkSpec {
     assert(!rep.cells.exists(_.query == "boom"))
   }
 
+  test("--ab over an optimizer rule: spark.sql.optimizer.excludedRules=,<rule>") {
+    val key = "spark.sql.optimizer.excludedRules"
+    val rule = graft.functions.FixedDateFormatRule.getClass.getName.stripSuffix("$")
+    val o = Lab.parse(Seq("--sf", sf0001, "-n", "1", "--ab", s"$key=,$rule", "f15b_stac_item_doc"))
+    assert(o.ab.contains(key -> Seq("", rule)))
+    val before = spark.conf.getOption(key)
+    val rep = Lab.run(spark, o.sf, Lab.select(o.names), o.n, o.ab)
+    assert(spark.conf.getOption(key) == before, "the A/B key must be restored")
+    assert(rep.failed.isEmpty)
+    val plans = rep.cells.map(c => c.arm -> c.plan).toMap
+    assert(plans.keySet == Set(s"$key=", s"$key=$rule"))
+    for (c <- rep.cells) assert(c.times.size == 1 && c.jobs.head >= 1, c)
+    // only the arm that keeps the rule runs the kernel
+    val sparkFormat = "(?<!fixed_)date_format\\(".r
+    assert(plans(s"$key=").contains("fixed_date_format(") &&
+      sparkFormat.findFirstIn(plans(s"$key=")).isEmpty, plans(s"$key="))
+    assert(sparkFormat.findFirstIn(plans(s"$key=$rule")).nonEmpty &&
+      !plans(s"$key=$rule").contains("fixed_date_format("), plans(s"$key=$rule"))
+    // and both arms return the same rows
+    val f15b = SparkEntry.queries("f15b_stac_item_doc")
+    def rows(excluded: String) = {
+      spark.conf.set(key, excluded)
+      try f15b(spark, sf0001).collect().map(_.toString).sorted.toSeq
+      finally before.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    }
+    val kept = rows("")
+    assert(kept.nonEmpty && kept == rows(rule))
+  }
+
   test("an unknown query name or a graft.* A/B key fails loudly") {
     val e = intercept[IllegalArgumentException](Lab.select(Seq("j3_star_join", "no_such_query")))
     assert(e.getMessage.contains("no_such_query"))

@@ -18,8 +18,8 @@ class ZonalIndexSpec extends AnyFunSuite {
   private def parse(wkt: String): Option[Geometry] =
     try Option(wkt).map(new WKTReader(factory).read) catch { case _: Exception => None }
 
-  private def samples[T](g: Gen[T], n: Int): Seq[T] =
-    (0 until n).flatMap(i => g.apply(Gen.Parameters.default, Seed(7L + i)))
+  private def samples[T](g: Gen[T], n: Int, seed: Long = 7L): Seq[T] =
+    (0 until n).flatMap(i => g.apply(Gen.Parameters.default, Seed(seed + i)))
 
   private val half: Gen[Double] = Gen.choose(-30, 30).map(_ * 0.5)
   private def ring(pts: Seq[(Double, Double)]) =
@@ -67,19 +67,22 @@ class ZonalIndexSpec extends AnyFunSuite {
 
   test("index slots equal brute-force JTS covers over fuzzed boundary sets") {
     var covered = 0
-    for (set <- samples(Gen.choose(0, 24).flatMap(Gen.listOfN(_, boundary)), 40)) {
+    for ((set, k) <- samples(Gen.choose(0, 24).flatMap(Gen.listOfN(_, boundary)), 40).zipWithIndex) {
       val index = ZonalIndex(set)
       val geoms = set.map(b => parse(b._1))
-      // every lattice point around each envelope, plus off-grid probes
+      // every lattice point around each envelope, random points, plus
+      // off-grid, infinite and NaN probes
+      val random = samples(Gen.zip(Gen.choose(-20.0, 200.0), Gen.choose(-20.0, 20.0)), 200, 1000L * k)
       val pts = (set.flatMap { case (_, (w, s, e, n)) =>
         for {
           i <- math.floor(w * 2).toInt - 2 to math.ceil(e * 2).toInt + 2
           j <- math.floor(s * 2).toInt - 2 to math.ceil(n * 2).toInt + 2
         } yield (i * 0.5, j * 0.5)
-      } ++ Seq((Double.NaN, 0.0), (1000.0, 1000.0), (-0.25, 0.75))).distinct
+      } ++ random ++ Seq((Double.NaN, 0.0), (0.0, Double.NaN), (Double.NaN, Double.NaN),
+        (Double.PositiveInfinity, 0.0), (1000.0, 1000.0), (-0.25, 0.75))).distinct
       for ((x, y) <- pts) {
         val p = factory.createPoint(new Coordinate(x, y))
-        val want = geoms.indices.filter(i => !x.isNaN && geoms(i).exists(_.covers(p)))
+        val want = geoms.indices.filter(i => !x.isNaN && !y.isNaN && geoms(i).exists(_.covers(p)))
         val got = index.slots(x, y).toSeq
         assert(got == want, s"($x, $y) in ${set.map(_._1)}")
         covered += want.size
@@ -93,6 +96,9 @@ class ZonalIndexSpec extends AnyFunSuite {
     val index = ZonalIndex(Seq(
       (null, (0.0, 0.0, 4.0, 4.0)), ("not valid wkt", (0.0, 0.0, 4.0, 4.0)),
       ("POLYGON((0 0, 4 0, 4 4, 0 4, 0 0))", (nan, nan, nan, nan))))
-    for (x <- 0 to 8; y <- 0 to 8) assert(index.slots(x * 0.5, y * 0.5).isEmpty)
+    for (x <- 0 to 8; y <- 0 to 8) {
+      assert(index.slots(x * 0.5, y * 0.5).isEmpty)
+      index.foreachSlot(x * 0.5, y * 0.5)(s => fail(s"slot $s visited at ($x, $y)"))
+    }
   }
 }

@@ -2,6 +2,8 @@ package graft.ops
 
 import graft.SparkSpec
 import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.functions.{col, date_add, date_format, lit}
+import org.apache.spark.sql.types.{DateType, StringType}
 import org.locationtech.jts.geom.{Coordinate, Geometry, GeometryFactory}
 import org.locationtech.jts.io.WKTReader
 import org.scalacheck.Gen
@@ -69,9 +71,26 @@ class ZonalReducerSpec extends SparkSpec {
   private val day0 = java.sql.Timestamp.valueOf("2024-01-01 00:00:00").getTime
   private def ts(t: Int) = new java.sql.Timestamp(day0 + t * 86400000L)
 
-  private def pixelFrame(px: Seq[Pixel]): DataFrame =
-    px.map { case (t, x, y, v, lon, lat) => (ts(t), y, x, v, lon, lat) }
-      .toDF("t", "y", "x", "v", "lon", "lat")
+  private val date0 = java.time.LocalDate.of(2024, 1, 1)
+
+  /** The pixels with `t` as a TIMESTAMP, or as a DATE or a STRING where
+    * `tKind` says so. */
+  private def pixelFrame(px: Seq[Pixel], tKind: String = "timestamp"): DataFrame =
+    if (tKind == "timestamp")
+      px.map { case (t, x, y, v, lon, lat) => (ts(t), y, x, v, lon, lat) }
+        .toDF("t", "y", "x", "v", "lon", "lat")
+    else {
+      val day = date_add(lit(java.sql.Date.valueOf(date0)), col("t"))
+      px.toDF("t", "x", "y", "v", "lon", "lat").select(
+        (if (tKind == "date") day else date_format(day, "yyyy-MM-dd")).as("t"),
+        col("y"), col("x"), col("v"), col("lon"), col("lat"))
+    }
+
+  private def timestep(r: Row, i: Int): Int = r.get(i) match {
+    case t: java.sql.Timestamp => ((t.getTime - day0) / 86400000L).toInt
+    case d: java.sql.Date => (d.toLocalDate.toEpochDay - date0.toEpochDay).toInt
+    case s: String => (java.time.LocalDate.parse(s).toEpochDay - date0.toEpochDay).toInt
+  }
 
   /** Boundary i's key: (i % 2, i / 2) when leveled, so ids repeat across
     * levels; (0, i) otherwise. */
@@ -120,8 +139,7 @@ class ZonalReducerSpec extends SparkSpec {
     val k = if (leveled) 2 else 1
     df.collect().toSeq.map { r =>
       val level = if (leveled) r.getInt(0) else 0
-      val t = ((r.getTimestamp(k).getTime - day0) / 86400000L).toInt
-      (level, r.getLong(k - 1), t) -> (k + 1 until k + 7).map(i =>
+      (level, r.getLong(k - 1), timestep(r, k)) -> (k + 1 until k + 7).map(i =>
         if (r.isNullAt(i)) None else Some(r.get(i).asInstanceOf[Number].doubleValue))
     }.sortBy(_._1)
   }
@@ -171,6 +189,27 @@ class ZonalReducerSpec extends SparkSpec {
     }
     // the samples reach both kinds of empty row
     assert(nullRows > 0 && zeroRows > 0, (nullRows, zeroRows))
+  }
+
+  test("DATE and STRING timesteps: driver path == distributed path == plain Scala, row for row") {
+    for (((px, bs, split), sample) <- samples(caseGen, 8).zipWithIndex;
+         (tKind, tType) <- Seq("date" -> DateType, "string" -> StringType)) {
+      val ctx = s"sample $sample t $tKind"
+      val bframe = boundaryFrame(bs, leveled = false)
+      val pixels = pixelFrame(px, tKind).repartition(split)
+      def run(cap: Long) = Zonal.zonalStatsKeyed(pixels, bframe, Seq("boundary_id"), cap)
+      val (onDriver, distributed) = (run(Zonal.DriverRows), run(0L))
+      assert(onDriver.isLocal && !distributed.isLocal, ctx)
+      assert(onDriver.schema("t").dataType == tType && distributed.schema("t").dataType == tType, ctx)
+      // the driver path's rows come in timestep order
+      val order = onDriver.collect().map(timestep(_, 1)).toSeq
+      assert(order == order.sorted, ctx)
+      val want = reference(px, bs, leveled = false).toSeq.sortBy(_._1)
+      val (a, b) = (rows(onDriver, leveled = false), rows(distributed, leveled = false))
+      assert(a.map(_._1) == want.map(_._1) && b.map(_._1) == want.map(_._1), ctx)
+      for (((k, (w, _)), (x, y)) <- want.zip(a.map(_._2).zip(b.map(_._2))))
+        assert(close(x, w) && close(y, w), s"$ctx $k: driver $x, distributed $y, reference $w")
+    }
   }
 
   test("the driver path repeats its doubles bit for bit") {
