@@ -4,19 +4,28 @@ import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
-import graft.functions.{FixedDateFormatRule, Haversine, QDotProduct, SpanHashWindows,
-  SpanHashWindowsLong, TileStatsPartial}
+import graft.functions.{FixedDateFormatRule, FixedZoneRule, HalfUpRoundRule, Haversine,
+  QDotProduct, SpanHashWindows, SpanHashWindowsLong, TileStatsPartial}
 
 /** The one wiring path for the engine's native expressions, the as-of
-  * planner strategy and the `date_format` kernel rule: `Sessions.build`
-  * applies it through `builder.withExtensions`, and a spark-submit /
-  * Thrift-server deployment sets
-  * `--conf spark.sql.extensions=graft.GraftExtensions`. Either way
-  * `haversine_km`, `tile_stats_partial`, `span_hash_windows` and `q_dot`
-  * are callable from SQL on every session, and the optimizer runs
-  * [[graft.functions.FixedDateFormatRule]], which puts a fixed-field
-  * kernel in place of `date_format` (exclude it by its class name in
-  * `spark.sql.optimizer.excludedRules`).
+  * planner strategy and the kernel rules: `Sessions.build` applies it
+  * through `builder.withExtensions`, and a spark-submit / Thrift-server
+  * deployment sets `--conf spark.sql.extensions=graft.GraftExtensions`.
+  * Either way `haversine_km`, `tile_stats_partial`, `span_hash_windows`
+  * and `q_dot` are callable from SQL on every session, and the optimizer
+  * runs three kernel rules:
+  *  - [[graft.functions.FixedDateFormatRule]], in the operator
+  *    optimization batch: a fixed-field kernel in place of
+  *    `date_format`, and an instant range in place of a `date_format`
+  *    window compared with a string literal;
+  *  - [[graft.functions.FixedZoneRule]], once, pre-CBO (after Spark's
+  *    own rewrites, so pushed filters stay Spark's): integer kernels for
+  *    `CAST(ntz AS TIMESTAMP)`, `CAST(x AS DATE)`, `year`, `month` and
+  *    `date_trunc` to DAY, WEEK or MONTH in a fixed-offset zone;
+  *  - [[graft.functions.HalfUpRoundRule]], once, pre-CBO: `round(x, 0)`
+  *    over DOUBLE without `BigDecimal`.
+  * Each keeps Spark's results bit for bit and is switched off by its
+  * class name in `spark.sql.optimizer.excludedRules`.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   import GraftExtensions._
@@ -32,6 +41,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     }
     ext.injectPlannerStrategy(_ => graft.plans.AsofJoinStrategy)
     ext.injectOptimizerRule(_ => FixedDateFormatRule)
+    Seq(FixedZoneRule, HalfUpRoundRule).foreach(r => ext.injectPreCBORule(_ => r))
   }
 }
 

@@ -1,6 +1,7 @@
 package graft
 
 import graft.model.QueryFn
+import jdk.jfr.{Configuration, Recording}
 import org.apache.spark.ListenerDrain
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
@@ -26,10 +27,13 @@ import org.apache.spark.sql.util.QueryExecutionListener
   *
   * Run: sbt "runMain graft.Lab --sf DIR [--cpus N] [-n N]
   *   [--ab spark.conf.key=v1,v2,...] [--plans OUT.tsv] [--explain]
-  *   [query-or-prefix ...]" — no names means every registered query.
-  * `--plans` writes one TSV row per query (per query@arm under `--ab`)
-  * in the columns of [[PlanColumns]]; `--explain` prints each query's
-  * formatted final plan once. */
+  *   [--jfr OUT.jfr] [query-or-prefix ...]" — no names means every
+  * registered query. `--plans` writes one TSV row per query (per
+  * query@arm under `--ab`) in the columns of [[PlanColumns]];
+  * `--explain` prints each query's formatted final plan once; `--jfr`
+  * records the measured rounds with the JDK's own `profile` flight
+  * recorder settings (`tools/jfr_top.py OUT.jfr` prints the top frames
+  * per thread group). */
 object Lab {
   case class Opts(sf: String = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", ""),
                   cpus: String = math.min(32, Runtime.getRuntime.availableProcessors()).toString,
@@ -37,6 +41,7 @@ object Lab {
                   ab: Option[(String, Seq[String])] = None,
                   plans: Option[String] = None,
                   explain: Boolean = false,
+                  jfr: Option[String] = None,
                   names: Seq[String] = Nil)
 
   /** One (query, arm): wall seconds and jobs of every measured run,
@@ -79,6 +84,7 @@ object Lab {
       parse(rest).copy(n = v.toInt)
     case "--plans" +: v +: rest => parse(rest).copy(plans = Some(v))
     case "--explain" +: rest => parse(rest).copy(explain = true)
+    case "--jfr" +: v +: rest => parse(rest).copy(jfr = Some(v))
     case "--ab" +: v +: rest =>
       val o = parse(rest)
       require(o.ab.isEmpty, "at most one --ab")
@@ -104,7 +110,7 @@ object Lab {
   }
 
   def run(spark: SparkSession, sf: String, queries: Seq[(String, QueryFn)], n: Int,
-          ab: Option[(String, Seq[String])] = None): Report = {
+          ab: Option[(String, Seq[String])] = None, jfr: Option[String] = None): Report = {
     val sc = spark.sparkContext
     // (conf value to set, arm label)
     val arms = ab.fold(Seq(("", NoArm))) { case (k, vs) => vs.map(v => (v, s"$k=$v")) }
@@ -148,7 +154,18 @@ object Lab {
     spark.listenerManager.register(qeListener)
     val calibs = try {
       (0 until 2).foreach(round(_, record = false))
-      (0 until n).map(round(_, record = true))
+      // the measured rounds only: warm-up compiles and first loads stay out
+      val recording = jfr.map { out =>
+        val r = new Recording(Configuration.getConfiguration("profile"))
+        r.start()
+        (r, out)
+      }
+      try (0 until n).map(round(_, record = true))
+      finally recording.foreach { case (r, out) =>
+        r.stop()
+        r.dump(java.nio.file.Paths.get(out))
+        r.close()
+      }
     } finally {
       sc.removeSparkListener(listener)
       spark.listenerManager.unregister(qeListener)
@@ -178,7 +195,7 @@ object Lab {
     val queries = select(o.names)
     val spark = Sessions.build(o.cpus)
     try {
-      val rep = run(spark, o.sf, queries, o.n, o.ab)
+      val rep = run(spark, o.sf, queries, o.n, o.ab, o.jfr)
       def fmt(v: Double) = f"$v%.3f"
       println(s"[lab] sf=${o.sf} cpus=${o.cpus} n=${o.n} calib_s=${rep.calibs.map(fmt).mkString(",")}")
       println(("query" +: "arm" +: "min_s" +: "med_s" +: "jobs" +: PlanColumns).mkString("[lab] ", "\t", ""))
@@ -189,6 +206,7 @@ object Lab {
           .mkString("[lab] ", "\t", ""))
       }
       rep.failed.foreach { case (q, arm) => println(s"[lab] FAILED $q $arm") }
+      o.jfr.foreach(out => println(s"[lab] wrote ${java.nio.file.Paths.get(out).toAbsolutePath}"))
       o.plans.foreach { out =>
         val rows = rep.cells.map(c => (c.name +: c.counts).mkString("\t")) ++
           rep.failed.map { case (q, arm) => (rowName(q, arm) +: PlanColumns.map(_ => "ERR")).mkString("\t") }

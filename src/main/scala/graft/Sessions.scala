@@ -41,6 +41,15 @@ object Sessions {
       // set before the first session)
       .config("spark.sql.codegen.cache.maxEntries", "5000")
       .config("spark.ui.enabled", "false")
+      // every stage broadcasts its task binary, and TorrentBroadcast
+      // writes a broadcast into chunks of this size: at the default 4 MB
+      // each job allocates 4 MB arrays, which G1 places as humongous
+      // objects outside the young generation. Once the kernels cut the
+      // per-row garbage, young collections came rarer, humongous chunks
+      // filled the heap between them, and a collection ran out of
+      // to-space (serve_mixed heap after a collection ~290 → 320–800 MB;
+      // SCALE.md). 256 KB chunks stay under a 1 MB region's half.
+      .config("spark.broadcast.blockSize", "256k")
       // events.parquet carries TIMESTAMP(NANOS); read as long + convert.
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       // partition keys are STRING by contract everywhere (unit_id,

@@ -4,8 +4,9 @@ import java.nio.charset.StandardCharsets
 import java.time.Instant
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{BoundReference, DateFormatClass, Expression,
-  Literal, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, DateFormatClass, EqualTo,
+  Expression, GreaterThan, GreaterThanOrEqual, LessThan, LessThanOrEqual, Literal, Predicate,
+  UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.catalyst.rules.Rule
@@ -19,7 +20,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * `yyyy`, `MM`, `dd`, `HH`, `mm` and `ss` plus literal text. Its output
   * is Spark's `DateFormatClass` output byte for byte, without
   * java.time's formatter: the value's zone offset turns micros into local
-  * seconds, Hinnant's day arithmetic turns days into a civil date, and
+  * seconds, [[Civil]]'s day arithmetic turns days into a civil date, and
   * the digits are written into one byte array. Years outside 0000–9999,
   * where Spark's formatter adds a sign, go to `DateFormatClass` itself.
   * [[FixedDateFormatRule]] puts it in place of `date_format`; it is not
@@ -128,19 +129,9 @@ final class FixedDateKernel(pattern: String, timeZoneId: String) extends Seriali
     val second = Math.floorDiv(micros, 1000000L)
     val local = second +
       (if (fixed) offset else rules.getOffset(Instant.ofEpochSecond(second)).getTotalSeconds)
-    val days = Math.floorDiv(local, 86400L)
     val ofDay = Math.floorMod(local, 86400L).toInt
-    // civil date of `days` (H. Hinnant, "chrono-Compatible Low-Level
-    // Date Algorithms"), proleptic Gregorian as java.time's IsoChronology
-    val z = days + 719468L
-    val era = Math.floorDiv(z, 146097L)
-    val doe = (z - era * 146097L).toInt
-    val yoe = (doe - doe / 1460 + doe / 36524 - doe / 146096) / 365
-    val doy = doe - (365 * yoe + yoe / 4 - yoe / 100)
-    val mp = (5 * doy + 2) / 153
-    val day = doy - (153 * mp + 2) / 5 + 1
-    val month = if (mp < 10) mp + 3 else mp - 9
-    val year = era * 400L + yoe + (if (month <= 2) 1 else 0)
+    val civil = Civil.fromDays(Math.floorDiv(local, 86400L))
+    val year = Civil.year(civil)
     if (year < 0 || year > 9999)
       fallback.eval(InternalRow(micros)).asInstanceOf[UTF8String]
     else {
@@ -153,8 +144,8 @@ final class FixedDateKernel(pattern: String, timeZoneId: String) extends Seriali
             val y = year.toInt
             put2(out, at, y / 100)
             put2(out, at + 2, y % 100)
-          case Month => put2(out, at, month)
-          case Day => put2(out, at, day)
+          case Month => put2(out, at, Civil.month(civil))
+          case Day => put2(out, at, Civil.day(civil))
           case Hour => put2(out, at, ofDay / 3600)
           case Minute => put2(out, at, ofDay / 60 % 60)
           case Second => put2(out, at, ofDay % 60)
@@ -171,9 +162,91 @@ final class FixedDateKernel(pattern: String, timeZoneId: String) extends Seriali
   }
 }
 
+/** `lo <= micros < hi` when `inside`, its negation otherwise: a
+  * fixed-field `date_format` window compared as instants, put in place
+  * by [[FixedDateFormatRule]]. The generated code reads the bounds from
+  * the references array, so a window the JVM has not seen compiles no
+  * new class. */
+case class InstantRange(child: Expression, lo: Long, hi: Long, inside: Boolean)
+    extends UnaryExpression with Predicate {
+
+  override def nullIntolerant: Boolean = true
+  override def prettyName: String = "instant_range"
+
+  override protected def nullSafeEval(micros: Any): Any = {
+    val m = micros.asInstanceOf[Long]
+    (lo <= m && m < hi) == inside
+  }
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val bounds = ctx.addReferenceObj("instantRange", Array(lo, hi, if (inside) 1L else 0L), "long[]")
+    val r = ctx.addMutableState("long[]", "instantRange", v => s"$v = $bounds;")
+    defineCodeGen(ctx, ev, m => s"($r[0] <= $m && $m < $r[1]) == ($r[2] != 0L)")
+  }
+
+  override protected def withNewChildInternal(c: Expression): InstantRange = copy(child = c)
+}
+
+object InstantRange {
+  /** The comparison `date_format(ts, pattern) op s` as an instant range
+    * over `ts`, or None where it is not exact. It is exact when the
+    * pattern's fields are a prefix of `yyyy`, `MM`, `dd`, `HH`, `mm`,
+    * `ss` in that order, led by `yyyy`, the zone is fixed-offset and `s`
+    * is an output of the pattern with a year in 0000–9999: in-range
+    * outputs then sort as their instants do, and Spark writes every
+    * other year with a sign, `+` or `-`, which sorts below every digit.
+    * With T(s) the first instant whose output is `s`, U(s) the first
+    * instant after `s`'s last unit and Y the first instant of year
+    * 10000: `f >= s` is `T(s) <= ts < Y`, `f > s` is `U(s) <= ts < Y`,
+    * `f = s` is `T(s) <= ts < U(s)`, and `<`, `<=` negate `>=`, `>`. */
+  def of(ts: Expression, pattern: String, timeZoneId: String, op: String,
+         s: UTF8String): Option[InstantRange] = {
+    import FixedDateFormat.{Day, Hour, Minute, Month, Second, Year}
+    val zone = DateTimeUtils.getZoneId(timeZoneId).getRules
+    val (template, fields) = FixedDateFormat.layout(pattern).getOrElse(return None)
+    val codes = fields.indices.by(2).map(fields(_))
+    val bytes = s.getBytes
+    if (!zone.isFixedOffset || codes.isEmpty || codes != codes.indices || fields(1) != 0 ||
+        bytes.length != template.length) return None
+    // the field values, each missing one at its least
+    val v = Array(0L, 1L, 1L, 0L, 0L, 0L)
+    for (i <- codes.indices) {
+      val at = fields(2 * i + 1)
+      val digits = bytes.slice(at, at + (if (i == Year) 4 else 2))
+      if (!digits.forall(b => b >= '0' && b <= '9')) return None
+      v(i) = new String(digits, StandardCharsets.US_ASCII).toLong
+    }
+    val offset = zone.getOffset(Instant.EPOCH).getTotalSeconds
+    def micros(localSeconds: Long) = (localSeconds - offset) * 1000000L
+    val day = Civil.toDays(v(Year), v(Month).toInt, v(Day).toInt)
+    val t = micros(day * 86400L + v(Hour) * 3600L + v(Minute) * 60L + v(Second))
+    // parsing and formatting again gives `s` back only for an output
+    if (new FixedDateKernel(pattern, timeZoneId).format(t) != s) return None
+    val u = (codes.last: @annotation.switch) match {
+      case Year => micros(Civil.toDays(v(Year) + 1, 1, 1) * 86400L)
+      // month 13 counts as January of the next year
+      case Month => micros(Civil.toDays(v(Year), v(Month).toInt + 1, 1) * 86400L)
+      case Day => t + 86400000000L
+      case Hour => t + 3600000000L
+      case Minute => t + 60000000L
+      case Second => t + 1000000L
+    }
+    val y10000 = micros(Civil.toDays(10000, 1, 1) * 86400L)
+    Some(op match {
+      case ">=" => InstantRange(ts, t, y10000, inside = true)
+      case ">" => InstantRange(ts, u, y10000, inside = true)
+      case "=" => InstantRange(ts, t, u, inside = true)
+      case "<" => InstantRange(ts, t, y10000, inside = false)
+      case "<=" => InstantRange(ts, u, y10000, inside = false)
+    })
+  }
+}
+
 /** Puts [[FixedDateFormat]] in place of `date_format(ts, 'pattern')`
   * where the pattern has a fixed-field layout and `ts` is a TIMESTAMP,
-  * formatted in the expression's zone. The analyzer casts a
+  * formatted in the expression's zone, and an [[InstantRange]] in place
+  * of such a `date_format` compared with a string literal where
+  * [[InstantRange.of]] finds the comparison exact. The analyzer casts a
   * TIMESTAMP_NTZ argument of `date_format` to TIMESTAMP, so that input
   * arrives here as a TIMESTAMP too. Any other pattern, a pattern that is
   * not a literal, or `spark.sql.legacy.timeParserPolicy=LEGACY` (whose
@@ -186,8 +259,51 @@ object FixedDateFormatRule extends Rule[LogicalPlan] {
   override def apply(plan: LogicalPlan): LogicalPlan =
     if (SQLConf.get.legacyTimeParserPolicy == LegacyBehaviorPolicy.LEGACY) plan
     else plan.transformAllExpressionsWithPruning(_.containsPattern(DATETIME)) {
+      case DateWindow(range) => range
       case d @ DateFormatClass(ts, Literal(p: UTF8String, _: StringType), Some(tz))
           if ts.dataType == TimestampType && FixedDateFormat.layout(p.toString).isDefined =>
         FixedDateFormat(ts, p.toString, tz, d.dataType)
     }
+
+  /** `date_format(ts, 'pattern') op 'literal'`, either side holding the
+    * literal, as its [[InstantRange]] where [[InstantRange.of]] finds
+    * one. Both strings compare as bytes (UTF8_BINARY). */
+  private object DateWindow {
+    def unapply(e: Expression): Option[InstantRange] = {
+      val (op, left, right) = e match {
+        case EqualTo(l, r) => ("=", l, r)
+        case LessThan(l, r) => ("<", l, r)
+        case LessThanOrEqual(l, r) => ("<=", l, r)
+        case GreaterThan(l, r) => (">", l, r)
+        case GreaterThanOrEqual(l, r) => (">=", l, r)
+        case _ => return None
+      }
+      val flipped = Map("=" -> "=", "<" -> ">", "<=" -> ">=", ">" -> "<", ">=" -> "<=")
+      (left, right) match {
+        case (Format(ts, p, tz), Text(s)) => InstantRange.of(ts, p, tz, op, s)
+        case (Text(s), Format(ts, p, tz)) => InstantRange.of(ts, p, tz, flipped(op), s)
+        case _ => None
+      }
+    }
+  }
+
+  private def binary(t: DataType): Boolean = t match {
+    case st: StringType => st.collationId == StringType.collationId
+    case _ => false
+  }
+
+  private object Format {
+    def unapply(e: Expression): Option[(Expression, String, String)] = e match {
+      case d @ DateFormatClass(ts, Literal(p: UTF8String, _: StringType), Some(tz))
+          if ts.dataType == TimestampType && binary(d.dataType) => Some((ts, p.toString, tz))
+      case _ => None
+    }
+  }
+
+  private object Text {
+    def unapply(e: Expression): Option[UTF8String] = e match {
+      case Literal(s: UTF8String, t) if binary(t) => Some(s)
+      case _ => None
+    }
+  }
 }

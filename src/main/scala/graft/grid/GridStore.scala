@@ -5,9 +5,15 @@ import org.apache.spark.sql.functions._
 
 /** Grid cube persistence — the 100 TB disk layout (SURVEY §1.3):
   * parquet partitioned by (collection, date(time)), rows sorted within
-  * partitions by (tile_y, tile_x) so parquet row-group min/max statistics
-  * prune spatially; temporal predicates prune whole partitions
-  * (Timescale-hypertable-equivalent chunk exclusion, item.py:55-73).
+  * partitions by (tile_y, tile_x) or their Morton key. A predicate on
+  * `p_date` prunes whole partitions (Timescale-hypertable-equivalent
+  * chunk exclusion, item.py:55-73); a predicate on `t` does not, since
+  * Spark writes `t` as INT96 and parquet keeps no usable statistics for
+  * it. The spatial sort only pays where a file holds several row groups:
+  * at parquet's default 128 MB block a date file is one row group
+  * (~120 KB for a global 1° grid, ~12 MB at 0.1°), so its min/max
+  * statistics cover the whole globe and a tile predicate prunes nothing
+  * until files grow past a block (SCALE.md, "The store's row groups").
   */
 object GridStore {
 
@@ -28,9 +34,10 @@ object GridStore {
       .partitionBy("collection", "p_date")
       .parquet(path)
 
-  /** Persist with Morton-interleaved (tile_y, tile_x) clustering so
-    * parquet row-group min/max statistics prune in BOTH spatial
-    * dimensions (see [[ZOrder]]). Same partition layout as [[write]];
+  /** Persist with Morton-interleaved (tile_y, tile_x) clustering, so
+    * that once a file spans several row groups their min/max statistics
+    * prune in BOTH spatial dimensions (see [[ZOrder]]; a file under one
+    * parquet block is one row group). Same partition layout as [[write]];
     * only the within-partition sort differs. Range-partitioning on the
     * z key also distributes a skew-free write at any tile count —
     * no single task ever owns more than its key range. */
@@ -81,8 +88,8 @@ object GridStore {
     fs.rename(new org.apache.hadoop.fs.Path(tmp), dst)
   }
 
-  /** Time-range + tile-bbox scoped read: both predicates are sargable —
-    * time prunes partitions, tile coords prune row groups. */
+  /** Time-range + tile-bbox scoped read: `p_date` prunes partitions;
+    * the tile bounds prune row groups only in files of several. */
   def readRange(spark: SparkSession, path: String,
                 from: String, to: String,
                 tx0: Int, tx1: Int, ty0: Int, ty1: Int): DataFrame =

@@ -264,19 +264,19 @@ object Dedup {
     * mislabels deeper chains). Returns (id, canonical). The
     * keep-one-per-cluster step of a dedup pipeline.
     *
-    * ADAPTIVE: the edge set is materialized once (it is reused every
-    * round regardless), and when it is small — ≤ `driverCap` edges,
+    * ADAPTIVE: when the edge set is small — ≤ `driverCap` edges,
     * default [[graft.model.DriverCap]], the size gate [[pagerankInt]]
-    * and `Derivation.transitiveDownstream` share — the whole iterative
-    * loop collapses to a single driver-side union-find: ~2 scheduled jobs instead of ~3·rounds. After LSH +
-    * Jaccard verification the surviving pair set at ANY corpus scale
-    * is dup-cluster-sized, orders below the corpus (at the bench it is
-    * 256 pairs paying 1.1 s of pure job scheduling), so the small path
-    * is the common one; past the cap the distributed pointer-jump loop
-    * runs unchanged on the already-materialized edges. Union-find
-    * labels every component by its true minimum (exact CC), which the
-    * jump loop converges to — PropertySpec's fixpoint law holds on
-    * both paths. */
+    * and `Derivation.transitiveDownstream` share — ONE job fetches it
+    * ([[graft.model.collectUnderCap]]) and the whole iterative loop
+    * collapses to a driver-side union-find, where the loop pays
+    * ~3·rounds scheduled jobs. After LSH + Jaccard verification the
+    * surviving pair set at ANY corpus scale is dup-cluster-sized, orders
+    * below the corpus (at the bench it is 256 pairs paying 1.1 s of pure
+    * job scheduling), so the small path is the common one; past the cap
+    * the edges are materialized once (every round reuses them) and the
+    * distributed pointer-jump loop runs. Union-find labels every
+    * component by its true minimum (exact CC), which the jump loop
+    * converges to — PropertySpec's fixpoint law holds on both paths. */
   def canonicalize(pairs: DataFrame, rounds: Int = 3,
                    driverCap: Long = graft.model.DriverCap): DataFrame = {
     val s = pairs.sparkSession
@@ -291,10 +291,12 @@ object Dedup {
         s"canonicalize needs integral doc ids; '$c' is $dt — hash or " +
           "dictionary-encode non-numeric ids first")
     }
-    val edgesRaw = pairs
+    val edgeCols = pairs
       .select(col("doc_a").cast("long").as("u"), col("doc_b").cast("long").as("v"))
-      .localCheckpoint()
-    if (edgesRaw.count() <= driverCap) {
+    // one job decides and fetches: under the cap the rows in hand are
+    // the edge list; past it the edges are checkpointed for the loop
+    val underCap = graft.model.collectUnderCap(edgeCols, driverCap)
+    if (underCap.isDefined) {
       import s.implicits._
       val parent = scala.collection.mutable.LongMap.empty[Long]
       def find(x: Long): Long = {
@@ -304,7 +306,8 @@ object Dedup {
         while (parent(c) != r) { val n = parent(c); parent(c) = r; c = n }
         r
       }
-      edgesRaw.as[(Long, Long)].collect().foreach { case (a, b) =>
+      underCap.get.foreach { r =>
+        val (a, b) = (r.getLong(0), r.getLong(1))
         if (!parent.contains(a)) parent(a) = a
         if (!parent.contains(b)) parent(b) = b
         val ra = find(a); val rb = find(b)
@@ -315,6 +318,7 @@ object Dedup {
       val out = parent.keys.toArray.map(id => (id, find(id)))
       return s.createDataset(out.toSeq).toDF("id", "canonical")
     }
+    val edgesRaw = edgeCols.localCheckpoint()
     val edges = edgesRaw
       .unionByName(edgesRaw.select(col("v").as("u"), col("u").as("v")))
     val nodes = edges.select(col("u").as("id")).distinct()
@@ -587,11 +591,18 @@ object Dedup {
       .filter(col("n_docs") >= 2)
 
   /** The span-shape size gate: estimated span bytes up to which the
-    * single-pass window shape runs (default 16 MB). Shared by
+    * single-pass window shape runs (default 16 MB; 0 forces the
+    * scalable shape, and a value that is not a byte count fails naming
+    * the key). Shared by
     * [[spanCoverage]] and the one-shot stale-span gate in
     * `streaming/StreamCuration`. */
-  def windowShapeMaxBytes(s: org.apache.spark.sql.SparkSession): Long =
-    s.conf.getOption("graft.span.windowShapeMaxBytes").map(_.toLong).getOrElse(16L << 20)
+  def windowShapeMaxBytes(s: org.apache.spark.sql.SparkSession): Long = {
+    val key = "graft.span.windowShapeMaxBytes"
+    s.conf.getOption(key).fold(16L << 20) { v =>
+      v.trim.toLongOption.filter(_ >= 0).getOrElse(throw new IllegalArgumentException(
+        s"$key must be a byte count >= 0, got '$v'"))
+    }
+  }
 
   /** Per-document fraction of tokens covered by cross-document
     * duplicated spans — the "how much of this doc is boilerplate"

@@ -2,6 +2,7 @@ package graft
 
 import scala.reflect.ClassTag
 
+import org.apache.spark.TaskContext
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
 import org.apache.spark.sql.catalyst.expressions.{UnsafeProjection, UnsafeRow}
@@ -81,10 +82,18 @@ package object model {
     val qe = df.queryExecution
     SQLExecution.withNewExecutionId(qe, Some(name)) {
       val rdd = qe.toRdd
-      val n = math.max(rdd.getNumPartitions, 1)
+      val parts = rdd.getNumPartitions
+      val n = math.max(parts, 1)
       val c = math.min(math.max(cap, 0L), Long.MaxValue / 4)
       val share = math.min(c, (2 * c + n - 1) / n)
-      rdd.mapPartitions(rows => Iterator.single(task(share, rows))).collect()
+      // the general runJob, not mapPartitions(…).collect(): Spark's
+      // ClosureCleaner reads and parses the class that declares each
+      // closure it cleans, on every job, and collect's two closures are
+      // declared in RDD and SparkContext (~200 KB each)
+      val out = new Array[U](parts)
+      rdd.sparkContext.runJob(rdd, (_: TaskContext, rows: Iterator[InternalRow]) => task(share, rows),
+        0 until parts, (i: Int, u: U) => out(i) = u)
+      out
     }
   }
 

@@ -97,4 +97,12 @@ class EdgeSpec extends SparkSpec {
     val m = Dedup.canonicalize(pairs).as[(Long, Long)].collect().toMap
     assert(m == Map(5L -> 2L, 9L -> 2L, 2L -> 2L))
   }
+
+  test("canonicalize under the cap fetches its edges in one job") {
+    val pairs = spark.range(6).select(col("id").as("doc_a"), (col("id") % 3 + 10).as("doc_b"))
+    val (labels, jobs) = jobsDuring(Dedup.canonicalize(pairs))
+    assert(jobs == 1)
+    assert(labels.as[(Long, Long)].collect().toMap ==
+      Map(0L -> 0L, 3L -> 0L, 10L -> 0L, 1L -> 1L, 4L -> 1L, 11L -> 1L, 2L -> 2L, 5L -> 2L, 12L -> 2L))
+  }
 }

@@ -76,4 +76,17 @@ class LabSpec extends SparkSpec {
     intercept[IllegalArgumentException](Lab.parse(Seq("--ab", s"$aqe=true,false", "--ab", s"$aqe=false,true")))
     intercept[IllegalArgumentException](Lab.parse(Seq("--bogus")))
   }
+
+  test("--jfr OUT records the measured rounds into a readable flight recording") {
+    val out = java.nio.file.Files.createTempDirectory("lab-jfr").resolve("lab.jfr")
+    val o = Lab.parse(Seq("--sf", sf0001, "-n", "1", "--jfr", out.toString, "p1_time_filter"))
+    assert(o.jfr.contains(out.toString) && o.names == Seq("p1_time_filter"))
+    intercept[IllegalArgumentException](Lab.parse(Seq("--jfr")))
+    val rep = Lab.run(spark, o.sf, Lab.select(o.names), o.n, o.ab, o.jfr)
+    assert(rep.failed.isEmpty && rep.cells.size == 1)
+    val events = jdk.jfr.consumer.RecordingFile.readAllEvents(out)
+    assert(!events.isEmpty, out)
+    java.nio.file.Files.delete(out)
+    java.nio.file.Files.delete(out.getParent)
+  }
 }

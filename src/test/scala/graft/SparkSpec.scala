@@ -26,6 +26,17 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     } finally sc.removeSparkListener(listener)
   }
 
+  /** Runs `f` with the session confs `kvs` set, restoring each after. */
+  def withConf[T](kvs: (String, String)*)(f: => T): T = {
+    val prev = kvs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    kvs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try f
+    finally prev.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
   /** Drop managed tables AND clear their warehouse directories — a
     * crashed prior run can leave the location behind with no catalog
     * entry, making the next saveAsTable refuse the CREATE. */

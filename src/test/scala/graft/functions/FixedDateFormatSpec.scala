@@ -5,8 +5,8 @@ import java.time.{LocalDateTime, ZoneOffset}
 import graft.SparkSpec
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{BoundReference, DateFormatClass, Expression,
-  Literal}
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, DateFormatClass, EqualTo,
+  Expression, GreaterThan, GreaterThanOrEqual, LessThan, LessThanOrEqual, Literal}
 import org.apache.spark.sql.catalyst.expressions.codegen.GenerateUnsafeProjection
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{StringType, TimestampNTZType, TimestampType}
@@ -19,7 +19,10 @@ import org.scalacheck.rng.Seed
   * Gregorian cutover and zone transitions), in six zones, for the
   * engine's four patterns and random compositions of fields and
   * literals, interpreted and generated, NULL included; and the rule puts
-  * it in place only where the pattern and the parser policy allow. */
+  * it in place only where the pattern and the parser policy allow. A
+  * `date_format` window compared with a literal becomes an instant range
+  * with the comparison's results, for literals that are outputs of the
+  * layout; other literals keep the comparison. */
 class FixedDateFormatSpec extends SparkSpec {
 
   private def samples[T](g: Gen[T], n: Int, seed: Long): Seq[T] =
@@ -88,16 +91,6 @@ class FixedDateFormatSpec extends SparkSpec {
     assert(fellBack > 0 && fellBack < zones.size * patterns.size * values.size, fellBack)
   }
 
-  private def withConf[T](kvs: (String, String)*)(f: => T): T = {
-    val prev = kvs.map { case (k, _) => k -> spark.conf.getOption(k) }
-    kvs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try f
-    finally prev.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
-    }
-  }
-
   private val excluded = "spark.sql.optimizer.excludedRules" ->
     FixedDateFormatRule.getClass.getName.stripSuffix("$")
 
@@ -157,5 +150,115 @@ class FixedDateFormatSpec extends SparkSpec {
       assert(t.select(date_format(col("t"), "yyyy-MM-dd")).collect().toSeq ==
         Seq(Row("1970-01-01"), Row("2024-05-06")))
     }
+  }
+
+  /** (pattern, sample outputs): patterns the window rewrite takes. */
+  private val windowPatterns = Seq("yyyy-MM-dd", "yyyyMMdd", "yyyy", "yyyy-MM",
+    "yyyy-MM-dd'T'HH:mm:ss'Z'", "yyyy/MM/dd HH", "yyyy-MM-dd HH:mm")
+  private val ops = Seq("=", "<", "<=", ">", ">=")
+  private def compare(op: String, l: Expression, r: Expression): Expression = op match {
+    case "=" => EqualTo(l, r)
+    case "<" => LessThan(l, r)
+    case "<=" => LessThanOrEqual(l, r)
+    case ">" => GreaterThan(l, r)
+    case ">=" => GreaterThanOrEqual(l, r)
+  }
+
+  test("instant range == date_format compared with an output literal, interpreted and generated") {
+    val values = samples(micros, 300, 41L)
+    for (zone <- Seq("UTC", "+05:45", "-00:30"); p <- windowPatterns) {
+      val format = DateFormatClass(input, Literal(p), Some(zone))
+      // outputs of the layout, the first and last four-digit years too
+      val lits = (values.take(60) ++ Seq(at(0, 1, 1), at(9999, 12, 31, 23, 59), at(2024, 2, 29)))
+        .map(m => format.eval(InternalRow(m)).toString).filter(_.head.isDigit).distinct
+      assert(lits.exists(_.startsWith("0000")) && lits.exists(_.startsWith("9999")), lits)
+      for (s <- lits; op <- ops) {
+        val range = InstantRange.of(input, p, zone, op, org.apache.spark.unsafe.types.UTF8String
+          .fromString(s)).getOrElse(fail(s"$zone '$p' $op '$s' should rewrite"))
+        val spark = compare(op, format, Literal(s))
+        val generated = GenerateUnsafeProjection.generate(Seq(range))
+        for (m <- values ++ anchors ++ Seq(at(-1, 12, 31, 23, 59), at(-1, 6, 1))) {
+          val row = InternalRow(m)
+          val want = spark.eval(row)
+          assert(range.eval(row) == want, s"$zone '$p' $op '$s' $m interpreted")
+          assert(generated(row).getBoolean(0) == want, s"$zone '$p' $op '$s' $m generated")
+        }
+        assert(range.eval(InternalRow(null)) == null && generated(InternalRow(null)).isNullAt(0))
+      }
+    }
+  }
+
+  test("no instant range for literals that are not outputs, other patterns or other zones") {
+    def of(p: String, s: String, zone: String = "UTC") =
+      InstantRange.of(input, p, zone, ">=", org.apache.spark.unsafe.types.UTF8String.fromString(s))
+    assert(of("yyyy-MM-dd", "2024-02-29").isDefined)
+    for (s <- Seq("2024-02-30", "2023-02-29", "2024-13-01", "2024-00-01", "2024-01-00",
+                  "2024-1-01", "2024-01-01 ", "2024/01/01", "10000-01-01", "+999-01-01",
+                  "-001-01-01", "abcd-01-01", "", "2024-01-0a"))
+      assert(of("yyyy-MM-dd", s).isEmpty, s)
+    assert(of("yyyy-MM-dd HH:mm", "2024-01-01 24:00").isEmpty)
+    assert(of("yyyy-MM-dd HH:mm", "2024-01-01 23:60").isEmpty)
+    for ((p, s) <- Seq("MM-dd-yyyy" -> "01-02-2024", "yyyy-dd-MM" -> "2024-02-01",
+                       "'x'yyyy" -> "x2024", "yyyy-MM-dd HH:ss" -> "2024-01-01 10:05",
+                       "yyyyMMddyyyy" -> "2024010120240", "'T'" -> "T"))
+      assert(of(p, s).isEmpty, p)
+    assert(of("yyyy-MM-dd", "2024-01-01", "America/New_York").isEmpty)
+    assert(of("yyyy-MM-dd", "2024-01-01", "+05:45").isDefined)
+  }
+
+  private def ranges(df: DataFrame): Seq[Expression] =
+    df.queryExecution.optimizedPlan.flatMap(_.expressions.flatMap(_.collect {
+      case r: InstantRange => r
+    }))
+
+  test("window filters: rule kept == rule excluded on frames, either side, codegen and interpreted") {
+    val values = samples(micros.suchThat(m => m > -at(9000, 1, 1) && m < at(9000, 1, 1)), 300, 43L) ++
+      Seq(at(2024, 5, 6), at(2024, 5, 6, 23, 59), at(2024, 5, 7), at(2024, 5, 31, 12))
+    val windows = Seq(
+      "date_format(t, 'yyyy-MM-dd') BETWEEN '2024-05-06' AND '2024-05-31'",
+      "'2024-05-06' < date_format(t, 'yyyy-MM-dd')",
+      "date_format(t, 'yyyy-MM') = '2024-05'",
+      "'1970' >= date_format(t, 'yyyy')",
+      "date_format(t, 'yyyyMMdd') > '99991231'")
+    for (zone <- zones.take(4); interpreted <- Seq(false, true); w <- windows) {
+      val modes = if (interpreted) Seq("spark.sql.codegen.wholeStage" -> "false",
+        "spark.sql.codegen.factoryMode" -> "NO_CODEGEN") else Nil
+      withConf(("spark.sql.session.timeZone" -> zone) +: modes: _*) {
+        val df = frame(values).filter(expr(w))
+        assert(ranges(df).nonEmpty == (zone != "America/New_York"), s"$zone $w")
+        val got = df.collect().toSeq
+        val want = withConf(excluded) {
+          val off = frame(values).filter(expr(w))
+          assert(ranges(off).isEmpty && kernels(off).isEmpty)
+          off.collect().toSeq
+        }
+        assert(got == want, s"$zone $w interpreted=$interpreted")
+      }
+    }
+    // a literal that is not an output keeps the comparison (on the kernel)
+    val kept = frame(values).filter(expr("date_format(t, 'yyyy-MM-dd') >= '2024-5-06'"))
+    assert(ranges(kept).isEmpty && kernels(kept).nonEmpty)
+    assert(kept.count() == withConf(excluded)(frame(values)
+      .filter(expr("date_format(t, 'yyyy-MM-dd') >= '2024-5-06'")).count()))
+  }
+
+  test("new windows compile no new class: zonal requests after the first") {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    val pixels = spark.range(4 * 36).select(
+      timestamp_micros(lit(at(2024, 1, 1)) + (col("id") / 36).cast("long") * 86400000000L).as("t"),
+      (col("id") % 6).cast("int").as("x"), (col("id") % 36 / 6).cast("int").as("y"),
+      (col("id") % 11).cast("double").as("v"),
+      (col("id") % 6 + 0.5).as("lon"), (lit(5.5) - floor(col("id") % 36 / 6)).as("lat"))
+    import spark.implicits._
+    val boundaries = Seq(("a", "POLYGON((0 0, 3 0, 3 3, 0 3, 0 0))", 0.0, 0.0, 3.0, 3.0))
+      .toDF("boundary_id", "geom_wkt", "bw", "bs", "be", "bn")
+    def request(lo: String, hi: String) = graft.ops.Zonal.zonalStats(
+      pixels.filter(date_format(col("t"), "yyyy-MM-dd").between(lo, hi)), boundaries).collect()
+    assert(request("2024-01-01", "2024-01-02").nonEmpty)
+    val compiled = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    val windows = Seq("2024-01-02" -> "2024-01-03", "2024-01-03" -> "2024-01-04",
+      "2023-12-31" -> "2024-01-01", "2024-01-01" -> "2024-01-04")
+    for ((lo, hi) <- windows) assert(request(lo, hi).nonEmpty, lo)
+    assert(CodegenMetrics.METRIC_COMPILATION_TIME.getCount == compiled)
   }
 }

@@ -68,4 +68,19 @@ class SpanDispatchSpec extends SparkSpec {
         "est just past max must dispatch scalable")
     } finally spark.conf.unset("graft.span.windowShapeMaxBytes")
   }
+
+  test("windowShapeMaxBytes: a value that is not a byte count >= 0 fails naming key and value") {
+    for (bad <- Seq("abc", "-1", "1.5", "")) {
+      spark.conf.set("graft.span.windowShapeMaxBytes", bad)
+      try {
+        val e = intercept[IllegalArgumentException](Dedup.windowShapeMaxBytes(spark))
+        assert(e.getMessage.contains("graft.span.windowShapeMaxBytes") &&
+          e.getMessage.contains(s"'$bad'"), e.getMessage)
+      } finally spark.conf.unset("graft.span.windowShapeMaxBytes")
+    }
+    spark.conf.set("graft.span.windowShapeMaxBytes", "0")
+    try assert(Dedup.windowShapeMaxBytes(spark) == 0L)
+    finally spark.conf.unset("graft.span.windowShapeMaxBytes")
+    assert(Dedup.windowShapeMaxBytes(spark) == (16L << 20))
+  }
 }
